@@ -52,7 +52,7 @@ object BatchRunner {
     val cleaned = Cleaning.withRatios(
       Cleaning.withTimeFeatures(Cleaning.clean(all)))
     CuratedWriter.writeCurated(cleaned, output)
-    val counts = spark.read.parquet(output)
+    val counts = CuratedWriter.readCurated(spark, output)
       .groupBy("cab_type").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     loads.foreach(l => record(l, counts.get(l.cabType)))

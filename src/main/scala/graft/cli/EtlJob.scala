@@ -39,7 +39,7 @@ object EtlJob {
     CuratedWriter.writeCurated(cleaned, output)
     // row count from the write's own metrics would need a listener; a
     // cheap count on the curated output reads footers only.
-    spark.read.parquet(output).count()
+    CuratedWriter.readCurated(spark, output).count()
   }
 
   def main(args: Array[String]): Unit = {

@@ -303,16 +303,29 @@ object CuratedWriter {
     spark.read.parquet(s"$root/v=$v")
   }
 
-  /** Read back a curated tree (partition columns are reconstructed from
-    * the directory layout by the file index). */
+  /** Read back a curated tree with [[graft.taxi.TaxiSchemas.curated]]
+    * pinned (partition columns are reconstructed from the directory
+    * layout by the file index). The pin skips the one-task job that
+    * schema inference would launch on every read, and an existing but
+    * empty tree reads as an empty frame instead of failing; a missing
+    * path still throws `AnalysisException`.
+    *
+    * On a tree whose files drifted from the pin, columns not in the pin
+    * are not returned, pinned columns a file lacks read as null, and a
+    * column whose type changed fails at scan time (unless the parquet
+    * reader can widen the file's type to the pinned one, e.g. `int` or
+    * `float` data under a `double` column). Read such a tree with
+    * `spark.read.option("mergeSchema", "true").parquet(path)`. */
   def readCurated(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(graft.taxi.TaxiSchemas.curated).parquet(path)
 
-  /** Lenient variant: skip corrupt/truncated objects instead of failing
-    * the job — on a tree of millions of files one bad object is an
+  /** Lenient variant of [[readCurated]] (same pinned schema): skip
+    * corrupt/truncated objects instead of failing the job — on a tree
+    * of millions of files one bad object is an
     * operational certainty, and the right failure mode for analytics is
     * "log and continue", not "kill a 1000-executor stage". Row-accurate
     * pipelines should reconcile counts against the manifest afterwards. */
   def readCuratedLenient(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("ignoreCorruptFiles", "true").parquet(path)
+    spark.read.schema(graft.taxi.TaxiSchemas.curated)
+      .option("ignoreCorruptFiles", "true").parquet(path)
 }

@@ -20,6 +20,7 @@ object TaxiSchemas {
   private def s(n: String)  = StructField(n, StringType)
   private def i(n: String)  = StructField(n, IntegerType)
   private def ts(n: String) = StructField(n, TimestampType)
+  private def dt(n: String) = StructField(n, DateType)
 
   /** Verbatim-shaped yellow schema (`spark_jobs/utils.py:9-27`). */
   val yellow: StructType = StructType(Seq(
@@ -59,6 +60,19 @@ object TaxiSchemas {
     s("cab_type"), ts("pickup_ts"), ts("dropoff_ts"),
     i("pu_zone"), i("do_zone"),
     d("distance_mi"), d("fare"), d("tip"), d("total")))
+
+  /** The curated `cab_type/pickup_year/pickup_month` tree as
+    * `spark.read.parquet` infers it: the data columns in the order
+    * `Cleaning.clean` → `withTimeFeatures` → `withRatios` write them,
+    * then the three partition columns in `partitionBy` order. Pinned so
+    * curated reads skip the schema-inference job; `CuratedReadSpec`
+    * fails if the writer drifts from it. */
+  val curated: StructType = StructType(Seq(
+    ts("pickup_ts"), ts("dropoff_ts"), i("pu_zone"), i("do_zone"),
+    d("distance_mi"), d("fare"), d("tip"), d("total"), d("duration_min"),
+    dt("pickup_date"), i("pickup_hour"), s("pickup_dow"), s("pickup_ym"),
+    d("avg_speed_mph"), d("fare_per_mile"),
+    s("cab_type"), i("pickup_year"), i("pickup_month")))
 
   /** Zone lookup dimension (`scripts/generate_notebooks_auto.py:383-430`). */
   val zoneLookup: StructType = StructType(Seq(
