@@ -48,7 +48,7 @@ object BatchRunner {
       loads.foreach(record(_, None))
       throw new IllegalArgumentException(s"no readable cab types under $input")
     }
-    val all = frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    val all = SchemaNormalizer.unionCanonical(frames)
     val cleaned = Cleaning.withRatios(
       Cleaning.withTimeFeatures(Cleaning.clean(all)))
     CuratedWriter.writeCurated(cleaned, output)

@@ -111,15 +111,6 @@ object Relational {
       .orderBy(array_position(typedlit(days), col("dow")))
   }
 
-  /** P6: seeded sampling filter (`part2.ipynb` cells 2, 5-6 `df.sample`)
-    * — deterministic per partitioning, so checked rows-only. */
-  def sampleProfile(events: DataFrame, fraction: Double = 0.1): DataFrame =
-    events
-      .sample(withReplacement = false, fraction, seed = 42L)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("cnt"), round(avg("value"), 4).as("avg_value"))
-      .orderBy("event_type")
-
   /** The shared keep/drop band of [[hashSample]] and
     * [[stratifiedHashSample]] (and the SQL oracles' `fnv % 100` mirror):
     * one definition so the hash-keep contract can never drift between

@@ -14,33 +14,36 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object CuratedWriter {
 
-  /** S9: partitioned curated write. `maxRecordsPerFile` bounds output
-    * file sizes without a coalesce funnel. */
-  def writeCurated(trips: DataFrame, path: String,
-                   maxRecordsPerFile: Long = 5000000L): Unit =
-    writePartitioned(trips, path,
-      Seq("cab_type", "pickup_year", "pickup_month"), maxRecordsPerFile)
+  /** Rows per output file: bounds file sizes without a coalesce funnel. */
+  private val MaxRecordsPerFile = 5000000L
+
+  /** Input files merged per output file when [[compact]] rewrites an
+    * unpartitioned tree. */
+  private val MergeFactor = 16
+
+  /** S9: partitioned curated write, file sizes bounded by
+    * `MaxRecordsPerFile`. */
+  def writeCurated(trips: DataFrame, path: String): Unit =
+    writePartitioned(trips, path, Seq("cab_type", "pickup_year", "pickup_month"))
 
   /** Incremental month re-processing: dynamic partition overwrite
     * replaces ONLY the partitions present in `trips` and leaves the rest
     * of the curated tree intact — the reference's routine "re-run one
     * month" operation (`etl_yellow_s3.py` is invoked per month) without
     * rewriting or risking the other 300+ month partitions. */
-  def writeCuratedIncremental(trips: DataFrame, path: String,
-                              maxRecordsPerFile: Long = 5000000L): Unit =
+  def writeCuratedIncremental(trips: DataFrame, path: String): Unit =
     writePartitionedIncremental(trips, path,
-      Seq("cab_type", "pickup_year", "pickup_month"), maxRecordsPerFile)
+      Seq("cab_type", "pickup_year", "pickup_month"))
 
   /** The [[writeCurated]] layout pattern for ANY table: overwrite-mode
     * partitioned parquet with bounded file sizes. Partition columns
     * become directory keys, so downstream filters on them prune at the
     * file index — the layout decision that makes a one-partition query
     * touch 1/Nth of a 100 TB tree. */
-  def writePartitioned(df: DataFrame, path: String, cols: Seq[String],
-                       maxRecordsPerFile: Long = 5000000L): Unit =
+  def writePartitioned(df: DataFrame, path: String, cols: Seq[String]): Unit =
     df.write
       .mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
       .partitionBy(cols: _*)
       .parquet(path)
 
@@ -50,12 +53,11 @@ object CuratedWriter {
     * slice" operation that never rewrites (or risks) the rest of a
     * 100 TB layout. */
   def writePartitionedIncremental(df: DataFrame, path: String,
-                                  cols: Seq[String],
-                                  maxRecordsPerFile: Long = 5000000L): Unit =
+                                  cols: Seq[String]): Unit =
     df.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
       .partitionBy(cols: _*)
       .parquet(path)
 
@@ -119,8 +121,7 @@ object CuratedWriter {
     * First write into an empty/missing path is drift-free by definition. */
   def writePartitionedIncrementalChecked(df: DataFrame, path: String,
       cols: Seq[String], widen: Boolean = false,
-      existingSchema: Option[org.apache.spark.sql.types.StructType] = None,
-      maxRecordsPerFile: Long = 5000000L): Unit = {
+      existingSchema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
     import org.apache.spark.sql.functions.lit
     val spark = df.sparkSession
     val fsPath = new org.apache.hadoop.fs.Path(path)
@@ -161,7 +162,7 @@ object CuratedWriter {
             d.withColumn(f.name, lit(null).cast(f.dataType)))
       case None => df
     }
-    writePartitionedIncremental(widened, path, cols, maxRecordsPerFile)
+    writePartitionedIncremental(widened, path, cols)
   }
 
   /** S10: small aggregate-table write (single file is intentional —
@@ -231,21 +232,20 @@ object CuratedWriter {
     * of tiny files, and scans then pay a per-file open/footer cost that
     * can exceed the read itself. Partitioned trees repartition on the
     * partition columns (all rows of a partition collapse into one task
-    * → one file, `maxRecordsPerFile` re-splitting oversized ones);
-    * unpartitioned trees merge `mergeFactor` input files per output.
+    * → one file, `MaxRecordsPerFile` re-splitting oversized ones);
+    * unpartitioned trees merge `MergeFactor` input files per output.
     * Writes to a NEW path — swapping is the caller's atomic move; never
     * compact in place. Returns the output file count. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
-              partitionCols: Seq[String] = Nil, mergeFactor: Int = 16,
-              maxRecordsPerFile: Long = 5000000L): Int = {
+              partitionCols: Seq[String] = Nil): Int = {
     import org.apache.spark.sql.functions.col
     val df = spark.read.parquet(inPath)
     val shaped =
       if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*)
-      else df.repartition(math.max(1, df.inputFiles.length / mergeFactor))
+      else df.repartition(math.max(1, df.inputFiles.length / MergeFactor))
     val writer = shaped.write
       .mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(outPath)
     spark.read.parquet(outPath).inputFiles.length

@@ -97,9 +97,6 @@ object TextAnalysis {
   /** Stopword fraction of tokens (0 when no tokens). */
   def stopwordRatio(text: Column): Column = stopwordRatioOf(tokens(text))
 
-  /** Mean token length. */
-  def avgTokenLen(text: Column): Column = avgTokenLenOf(tokens(text))
-
   /** Non-alphanumeric-and-space character fraction. `translate` deletes
     * the allowed alphabet in one codegen'd pass — same count as the
     * regex `[^a-z0-9 ]` form but without per-row regex execution (the
@@ -160,8 +157,6 @@ object TextAnalysis {
     val cnts = graft.functions.HashExpressions.tokenSetCounts(toks, ordered.map(_._2))
     ordered.zipWithIndex.map { case ((l, _), i) => l -> element_at(cnts, i + 1) }
   }
-
-  def langScores(text: Column): Seq[(String, Column)] = langScoresOf(tokens(text))
 
   /** Language guess from a precomputed token array; no marker hits →
     * "und". array_max on (score, lang) structs: max score, then max lang
