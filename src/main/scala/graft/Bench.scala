@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // Default the per-query artifact INTO THE REPO (cwd under sbt), not
     // /tmp: the checked-in BENCH_rN.json tail-truncates the long line,
     // so this file is the only complete per-query record a later round
@@ -40,7 +40,7 @@ object Bench {
         // directory (these sessions use the in-memory catalog — no Hive
         // metastore exists to relocate)
         .config("spark.sql.warehouse.dir", warehouse.toString),
-      shufflePartitions = cpus.toInt)
+      shufflePartitions = cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Load guard: two rounds' headline numbers were inflated 5-40× by

@@ -62,6 +62,11 @@ object GraftSession {
       s
     } else local(appName = appName)
 
+  /** Core count for the CLI mains' local sessions: `SPARK_GRAFT_CPUS`
+    * when set, else every core this JVM sees. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Local session for tests / CLI runs. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {

@@ -1,7 +1,7 @@
 package graft
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8, "plan-audit")
+    val spark = GraftSession.local(GraftSession.cpus, "plan-audit")
     val d = "/root/testdata/sf0.001"
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

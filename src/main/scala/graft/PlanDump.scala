@@ -14,7 +14,8 @@ import java.nio.file.{Files, Paths}
   * artifacts (the st and io17+ gates) execute those side effects during
   * frame construction and return a checkpointed sink — their dump shows
   * the epilogue plan only, which is why streaming evidence lives in
-  * recorded state/bytes probes (ScaleProbe) rather than here. */
+  * state/bytes specs (CrossCorpusSpec's watermarked-screen state and
+  * band-append bytes cases) rather than here. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
@@ -23,8 +24,7 @@ object PlanDump {
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "plan-dump")
+    val spark = GraftSession.local(GraftSession.cpus, "plan-dump")
     Files.createDirectories(outDir)
     // fail LOUDLY: automation that gathers plan evidence must not
     // proceed on stale/missing files (ADVICE r13) — count failures and

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val warehouse = Files.createTempDirectory("graft-warehouse")
     val base = SparkSession.builder()
       .config("spark.ui.enabled", "false")
@@ -21,7 +21,7 @@ object Verify {
     val spark = GraftSession.tune(
       if (sys.props.contains("spark.master")) base
       else base.master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt)
+      shufflePartitions = cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -10,14 +10,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * run with its duration and description.
   *
   * Usage: `runMain graft.cli.QueryProfile <query> [<query>...]`
-  * Env: `SPARK_GRAFT_SF_DIR` (default sf0.1), `SPARK_GRAFT_CPUS` (32).
+  * Env: `SPARK_GRAFT_SF_DIR` (default sf0.1), `SPARK_GRAFT_CPUS`
+  * (default: every core, see [[graft.GraftSession.cpus]]).
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QueryProfile <query> [<query>...]")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "query-profile")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus, "query-profile")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -81,32 +81,6 @@ object DupGroups {
     exact.union(near)
   }
 
-  /** Scale-path edges: exact-dup stars plus MINHASH-estimated near-dup
-    * pairs (LSH-banded, no exact pair scan). The exact-Jaccard
-    * [[dupEdges]] is the oracle-checkable form; this one is what a 100 TB
-    * run feeds the same [[connectedComponents]] — at 10× the fixture
-    * scale the exact pair scan costs ~11 s vs ~4 s for the banded
-    * estimate, and the gap is quadratic in corpus size. */
-  def dupEdgesApprox(documents: DataFrame, minEstJaccard: Double = 0.5): DataFrame = {
-    // exact-star election over the 128-bit content hash: grouping and
-    // joining on md5 moves ~16 bytes per doc through the exchanges where
-    // text-keyed grouping would shuffle the whole corpus payload.
-    // md5(NULL) is NULL — coalesce to a non-hex sentinel (md5 output is
-    // pure hex, so no collision) so null-text docs form a group too,
-    // matching exactDedup's groupBy semantics.
-    val hashed = documents.select(
-      coalesce(md5(col("text").cast("binary")), lit("null-text")).as("_h"),
-      col("doc_id"))
-    val reps = hashed.groupBy("_h").agg(min(col("doc_id")).as("rep"))
-    val exact = hashed.join(reps, "_h")
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("doc_id").as("a"), col("rep").as("b"))
-    val near = Dedup.minhashNearDups(documents)
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    exact.union(near)
-  }
-
   /** Dup-group summary: one row per component with its size — the
     * collapse plan a dedup pass executes (keep component id, drop the
     * rest). */

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * round count is O(log² n) for ANY graph shape — unlike
   * [[DupGroups.connectedComponents]]'s min-label propagation, whose
   * rounds equal the component DIAMETER (fine for near-clique dup
-  * clusters, pathological for chains: the `--family components` probe
-  * measures a 64-diameter chain costing 4× a 16-diameter one at the
+  * clusters, pathological for chains: SCALE.md's components probe
+  * measured a 64-diameter chain costing 4× a 16-diameter one at the
   * same data size; star contraction collapses the same chain in a
   * handful of rounds).
   *

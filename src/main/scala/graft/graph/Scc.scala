@@ -44,8 +44,8 @@ import org.apache.spark.sql.functions._
   *      coarsening). Cross-class edges drop. A deep singleton CHAIN —
   *      the pathology that peeled one end per round in the round-10
   *      form — now shatters at every prefix/suffix priority record
-  *      (~2·ln n classes per level): O(log n) levels, measured by the
-  *      `--family scc` probe's chain/cycle shapes.
+  *      (~2·ln n classes per level): O(log n) levels, asserted by
+  *      SccSpec's chain/cycle cases.
   *
   * Scale shape: every step is joins + aggregates on (node)/(src,dst)
   * keys with `localCheckpoint` cutting lineage per round (the
@@ -60,12 +60,12 @@ import org.apache.spark.sql.functions._
   */
 object Scc {
 
-  /** Diagnostics from the LAST [[components]] run in this JVM — probe /
+  /** Diagnostics from the LAST [[components]] run in this JVM — spec /
     * SCALE.md instrumentation only (not thread-safe, not part of the
     * operator contract): FW-BW levels used, and the maximum round count
-    * any single label propagation needed. The `--family scc` probe
-    * reads these to assert the logarithmic regime on planted
-    * cycle/chain pathologies. */
+    * any single label propagation needed. SccSpec reads these to
+    * assert the logarithmic regime on planted cycle/chain
+    * pathologies. */
   @volatile private[graft] var lastLevels: Int = 0
   @volatile private[graft] var lastMaxPropRounds: Int = 0
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   *    re-encode through `javax.imageio` (in the JDK — PNG/BMP/JPEG/GIF
   *    readers are always registered), running executor-side in
   *    partition batch loops.
-  *  - STUB path ([[stubDecode]] / [[stubResize]]): clearly-marked
+  *  - STUB path ([[stubDecode]]): clearly-marked
   *    deterministic byte math standing in for codecs absent from the
   *    runtime (video/audio); the schema, batching, and partition-wise
   *    execution around it are the real production plumbing.
@@ -63,35 +63,6 @@ object Multimodal {
       }
     }
     spark.createDataFrame(rdd, featureSchema)
-  }
-
-  /** STUB resize: deterministic byte-stride downsample standing in for an
-    * image resize (keeps every `factor`-th byte). Real codepath would
-    * decode → scale → re-encode inside the same per-partition loop. */
-  def stubResize(payload: Array[Byte], factor: Int): Array[Byte] = {
-    // ??? <- real resize goes here; deterministic fake below.
-    payload.indices.collect { case i if i % factor == 0 => payload(i) }.toArray
-  }
-
-  /** Resize stage: payload → downsampled payload + refreshed metadata.
-    * Runs as a codegen-friendly projection around a partition-wise
-    * transform; output schema mirrors [[withBinaryPayload]] so stages
-    * compose (decode → resize → extract). */
-  def resizePayloads(withPayload: DataFrame, factor: Int = 4): DataFrame = {
-    val spark = withPayload.sparkSession
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("orig_bytes", IntegerType)))
-    val rdd = withPayload.select("doc_id", "payload").rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        Row(r.getLong(0), stubResize(payload, factor), payload.length)
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-      .withColumn("meta", struct(length(col("payload")).as("n_bytes"),
-        lit(s"utf8-fake/resized:$factor").as("codec")))
   }
 
   /** Frame-sampling stage: chunk each payload into fixed-size "frames"
@@ -168,8 +139,7 @@ object Multimodal {
   /** REAL resize: ImageIO-decode the payload, nearest-neighbor resample
     * the raster down by `factor`, and PNG re-encode — decode → scale →
     * encode runs entirely inside one partition loop (the production
-    * shape for "transcode a binary column"; contrast [[stubResize]],
-    * which this supersedes wherever a JDK codec can read the payload).
+    * shape for "transcode a binary column").
     *
     * The resample is an explicit integer sampling — dst `(x, y)` takes
     * src `(x*w/dstW, y*h/dstH)` — rather than `Graphics2D.drawImage`,

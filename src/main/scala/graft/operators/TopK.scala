@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * ≤k-element buffer per (partition, group) instead of the group's
   * rows.
   *
-  * Honest scope note (measured, ScaleProbe `--family topk`): for the
+  * Honest scope note (measured, SCALE.md's hot-group top-k table;
+  * TopKSpec pins the heap ≡ window equivalence): for the
   * PLAIN batch query, Spark 4's `InferWindowGroupLimit` already
   * rewrites `row_number() ... WHERE rn <= k` into a map-side group
   * limit, so the window route is bounded-state too (0.7 MB shuffle on

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) data layout — the multi-dimensional clustering trick
@@ -40,18 +40,5 @@ object ZOrder {
         a + shiftleft(shiftrightunsigned(c, i).bitwiseAND(lit(1L)), i * n + j)
       }
     }
-  }
-
-  /** Cluster `df` for 2-D pruning: add the z-key over `(xCol, yCol)`,
-    * range-partition into `nFiles` splits and sort within each — one
-    * shuffle, and each output file covers a compact z-range (≈ a small
-    * rectangle of (x, y) space) whose parquet min/max stats both
-    * dimensions' predicates can prune against. */
-  def layoutByZOrder(df: DataFrame, xCol: String, yCol: String,
-                     bits: Int = 16, nFiles: Int = 32): DataFrame = {
-    val keyed = df.withColumn("_zkey", zorderKey2(col(xCol), col(yCol), bits))
-    keyed
-      .repartitionByRange(nFiles, col("_zkey"))
-      .sortWithinPartitions("_zkey")
   }
 }

@@ -318,14 +318,4 @@ object CuratedWriter {
     * `spark.read.option("mergeSchema", "true").parquet(path)`. */
   def readCurated(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(graft.taxi.TaxiSchemas.curated).parquet(path)
-
-  /** Lenient variant of [[readCurated]] (same pinned schema): skip
-    * corrupt/truncated objects instead of failing the job — on a tree
-    * of millions of files one bad object is an
-    * operational certainty, and the right failure mode for analytics is
-    * "log and continue", not "kill a 1000-executor stage". Row-accurate
-    * pipelines should reconcile counts against the manifest afterwards. */
-  def readCuratedLenient(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(graft.taxi.TaxiSchemas.curated)
-      .option("ignoreCorruptFiles", "true").parquet(path)
 }

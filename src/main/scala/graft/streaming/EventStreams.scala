@@ -202,8 +202,9 @@ object EventStreams {
         round(sum("value"), 4).as("value_sum"))
 
   /** Max total state-store rows observed in the LAST [[throughStream]]
-    * run in this JVM (probe instrumentation only, not part of the
-    * contract): for the keyed screens, state rows = live bucket keys.
+    * run in this JVM (instrumentation for CrossCorpusSpec's state-bound
+    * case, not part of the contract): for the keyed screens, state rows
+    * = live bucket keys.
     * Accumulated by a [[org.apache.spark.sql.streaming.StreamingQueryListener]]
     * over EVERY micro-batch of the run — `recentProgress` alone is
     * capped at `spark.sql.streaming.numRecentProgressUpdates` (default
@@ -305,7 +306,7 @@ object EventStreams {
         }
       statePartitions.foreach(n =>
         spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-      // state-store census for the probe harness: max total state
+      // state-store census for the state-bound spec: max total state
       // rows across the run's micro-batches (0 for stateless runs).
       // recentProgress alone is capped at numRecentProgressUpdates
       // (default 100) — a run with more micro-batches would silently
@@ -429,21 +430,6 @@ object EventStreams {
         landCuratedBatch(batch, batchId, path, partitionCols, widen)
       }
       .start()
-
-  /** Wire the windowed-count pipeline from a parquet directory stream to
-    * a memory sink — files dropped into `dir` are picked up as
-    * micro-batches. Complete mode re-emits the full aggregate each
-    * batch (fine for a bounded window count); production sinks would
-    * use Append + the watermark. */
-  def runFromParquetDir(spark: SparkSession, dir: String, schemaTable: String,
-                        queryName: String = "graft_stream")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(schemaTable).schema
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    windowedCounts(stream)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete()).start()
-  }
 
   /** Merge one change batch into a keyed parquet table, latest version
     * per key wins. The table is partitioned by `_kb` (a hash bucket of

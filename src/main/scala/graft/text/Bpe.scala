@@ -82,7 +82,8 @@ object Bpe {
     * words every 16 rounds), so plan depth is bounded at any merge
     * count. Delta arithmetic is exact integer — the merge table is
     * bit-identical to the full-recount reference [[trainRecount]],
-    * asserted by BpeSpec and the `--family bpe` scale probe.
+    * asserted by BpeSpec ("delta counting matches the full-recount
+    * reference bit-for-bit").
     *
     * Tier choice: each round is one Spark job + a 1-row collect, so a
     * production merge count (30k) pays 30k sequential scheduling
@@ -248,8 +249,8 @@ object Bpe {
   /** The classical full-recount reference: every round re-counts ALL
     * pairs over the whole word table. O(nMerges) corpus-table passes —
     * kept ONLY as the equivalence oracle for [[train]]'s delta counting
-    * (BpeSpec + the `--family bpe` probe assert bit-identical merge
-    * tables); never the production path. */
+    * (BpeSpec asserts bit-identical merge tables); never the production
+    * path. */
   private[graft] def trainRecount(docs: DataFrame, nMerges: Int = 10,
                                   textCol: String = "text"): (Seq[Merge], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")

@@ -94,9 +94,6 @@ object TextAnalysis {
   }
   // ----------------------------------------------------------------------
 
-  /** Stopword fraction of tokens (0 when no tokens). */
-  def stopwordRatio(text: Column): Column = stopwordRatioOf(tokens(text))
-
   /** Non-alphanumeric-and-space character fraction. `translate` deletes
     * the allowed alphabet in one codegen'd pass — same count as the
     * regex `[^a-z0-9 ]` form but without per-row regex execution (the

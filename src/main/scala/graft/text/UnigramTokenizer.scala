@@ -50,8 +50,8 @@ import org.apache.spark.sql.functions._
   * round is one broadcast-ish join + one 4·maxWordLen-rows-per-word
   * regroup + row-local DP over the vocabulary-sized word table, so
   * per-round cost is FLAT in both the round index and the corpus size
-  * (measured by the `--family unigram` probe). No collect anywhere —
-  * the driver holds only the round counter.
+  * (measured in SCALE.md). No collect anywhere — the driver holds only
+  * the round counter.
   */
 object UnigramTokenizer {
 
@@ -61,10 +61,6 @@ object UnigramTokenizer {
 
   /** 2^20 — the fixed-point scale of the integer log-scores. */
   val ScoreScale: Long = 1048576L
-
-  /** Per-round wall-clock diagnostics from the LAST [[train]] call in
-    * this JVM (probe instrumentation only, not part of the contract). */
-  @volatile private[graft] var lastRoundWallsMs: List[Long] = Nil
 
   /** (word, freq, n) over [[TextAnalysis.tokens]], capped at
     * `maxWordLen` characters. */
@@ -206,9 +202,7 @@ object UnigramTokenizer {
     var vocab = seedVocab(words, p).localCheckpoint(eager = true)
     var keep = p.seedMultis
     var seg: DataFrame = null
-    var walls = List.empty[Long]
     (1 to p.emRounds).foreach { r =>
-      val t0 = System.nanoTime()
       seg = viterbi(words, scoresOf(vocab), p).localCheckpoint(eager = true)
       val counts = seg
         .select(col("freq"), explode(col("pieces")).as("piece"))
@@ -221,9 +215,7 @@ object UnigramTokenizer {
           keep = keep * p.keepNum / p.keepDen
           prune(refreshed, keep)
         } else refreshed).localCheckpoint(eager = true)
-      walls = ((System.nanoTime() - t0) / 1000000L) :: walls
     }
-    lastRoundWallsMs = walls.reverse
     val scored = vocab.join(scoresOf(vocab), "piece")
       .select("piece", "cnt", "sc")
     (scored, seg)

@@ -349,4 +349,83 @@ class CrossCorpusSpec extends SparkTestBase {
       assert(streamed == batch, s"mismatch at inputFiles=$files")
     }
   }
+
+  test("corpus bucket guard keeps the unguarded screen decision set") {
+    // the fixture plus a planted corpus cluster of 40 near-copies far
+    // over maxBucket = 4; three incoming docs clone the cluster
+    val body = (1 to 40).map(i => s"tok${i * 7 % 53}").mkString(" ")
+    val clones = (ids: Seq[Long]) => ids.map(i => (i, s"$body u$i")).toDF("doc_id", "text")
+    val docs = fixture
+    val incoming = docs.filter(pmod(col("doc_id"), lit(3L)) === 0)
+      .unionByName(clones(Seq(900L, 903L, 906L)))
+    val corpus = docs.filter(pmod(col("doc_id"), lit(3L)) =!= 0)
+      .unionByName(clones((0 until 40).map(i => 1001L + 3 * i)))
+    def decisions(maxBucket: Int) =
+      Dedup.crossCorpusNearDups(incoming, corpus, maxBucket = maxBucket)
+        .filter(col("est_jaccard") >= 0.5)
+        .select("doc_in").collect().map(_.getLong(0)).toSet
+    val guarded = decisions(4)
+    assert(guarded == decisions(Int.MaxValue),
+      "corpus bucket guard changed the screen decision")
+    assert(Set(900L, 903L, 906L).subsetOf(guarded))
+    // all-clone incoming batch: every probe lands in the same oversized
+    // buckets, so the guard bounds it to incoming × bands (one hub per
+    // band at most), never incoming × |cluster|
+    val skewed = clones((0 until 6).map(i => 2000L + 3 * i))
+    val pairs = Dedup.crossCorpusNearDups(skewed, corpus, maxBucket = 4).count()
+    assert(pairs > 0 && pairs <= 6 * 16,
+      s"$pairs skewed-incoming pairs exceed incoming × bands")
+  }
+
+  test("appendBandIndex writes only its batch; a full rewrite grows with the index") {
+    // four ingest batches of 100 docs, consecutive ids sharing a text
+    def batch(k: Int) = spark.range(k * 100L, (k + 1) * 100L, 1, 2).select(
+      col("id").as("doc_id"),
+      concat_ws(" ", (0 until 12).map(j => concat(lit("w"),
+        pmod(hash(floor(col("id") / 2).cast("long") * 31 + j), lit(100000L)))): _*)
+        .as("text"))
+    def du(f: java.io.File): Long =
+      if (f.isFile) f.length() else Option(f.listFiles()).toSeq.flatten.map(du).sum
+    val dir = tempDir("graft_append_bytes")
+    val (app, rw) = (new java.io.File(s"$dir/app"), new java.io.File(s"$dir/rw"))
+    def written(f: java.io.File)(write: => Unit): Long = {
+      val before = du(f); write; du(f) - before
+    }
+    Dedup.saveBandIndex(Dedup.buildBandIndex(batch(0), reproducible = true), app.getPath)
+    val appBytes = (1 to 3).map(k =>
+      written(app)(Dedup.appendBandIndex(spark, app.getPath, batch(k))))
+    var idx = Dedup.buildBandIndex(batch(0), reproducible = true)
+    Dedup.saveBandIndex(idx, rw.getPath)
+    val rwBytes = (1 to 3).map { k =>
+      idx = Dedup.compactBandIndex(idx, batch(k))
+      written(rw)(Dedup.saveBandIndex(idx, rw.getPath))
+    }
+    assert(appBytes.last < 2 * appBytes.head, s"append bytes not flat: $appBytes")
+    assert(rwBytes.last > 2 * appBytes.last,
+      s"rewrite did not dominate append: rewrite $rwBytes, append $appBytes")
+  }
+
+  test("watermarked screen keeps every pair and holds less state than the unbounded screen") {
+    // 20 pairs of consecutive ids share a text, one second apart; each
+    // pair's tokens are its own, so every pair is its own cluster
+    val incoming = (0L until 40L).map { i =>
+      (i, (0 until 12).map(j => s"p${i / 2}w$j").mkString(" "))
+    }.toDF("doc_id", "text")
+      .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
+    val corpus = Seq((1000L, "static corpus filler sharing nothing with any " +
+      "incoming pair at all")).toDF("doc_id", "text")
+    val unbounded = graft.streaming.CorpusStreams.growingNearDupScreen(spark,
+      incoming.drop("ts"), corpus, reproducible = true, tau = 0.5,
+      inputFiles = 3).count()
+    val unboundedState = graft.streaming.EventStreams.lastMaxStateRows
+    val watermarked = graft.streaming.CorpusStreams
+      .growingNearDupScreenWatermarked(spark, incoming, corpus,
+        horizonSeconds = 4, watermarkDelay = "1 second", reproducible = true,
+        tau = 0.5, inputFiles = 3).count()
+    val watermarkedState = graft.streaming.EventStreams.lastMaxStateRows
+    assert(unbounded == 20L && watermarked == 20L,
+      s"screens diverged: unbounded $unbounded, watermarked $watermarked")
+    assert(watermarkedState < unboundedState,
+      s"watermarked state $watermarkedState did not undercut unbounded $unboundedState")
+  }
 }

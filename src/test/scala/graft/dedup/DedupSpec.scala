@@ -227,4 +227,24 @@ class DedupSpec extends SparkTestBase {
       existing.unionByName(out))
     assert(rerun.isEmpty)
   }
+
+  test("minhash star guard keeps the connected components of unguarded banding") {
+    // a planted cluster of 12 near-copies (shared 40-token body, unique
+    // tail) far over maxBucket = 4, mixed with the fixture's docs
+    val body = (1 to 40).map(i => s"tok${i * 7 % 53}").mkString(" ")
+    val mixed = docs.select("doc_id", "text").unionByName(
+      (0 until 12).map(i => (100L + i, s"$body u$i")).toDF("doc_id", "text"))
+    val nodes = mixed.select(col("doc_id").as("id"))
+    def components(pairs: org.apache.spark.sql.DataFrame) =
+      DupGroups.connectedComponents(pairs.filter(col("est_jaccard") >= 0.5)
+          .select(col("doc_a").as("a"), col("doc_b").as("b")), nodes)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val guarded = Dedup.minhashNearDups(mixed, maxBucket = 4)
+    val unguarded = Dedup.minhashNearDups(mixed, maxBucket = Int.MaxValue)
+    assert(guarded.count() < unguarded.count(), "the guard never fired")
+    val comp = components(guarded)
+    assert(comp == components(unguarded),
+      "star guard changed the component structure")
+    assert((100L until 112L).forall(comp(_) == 100L), s"cluster split: $comp")
+  }
 }

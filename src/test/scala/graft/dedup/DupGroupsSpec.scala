@@ -27,18 +27,9 @@ class DupGroupsSpec extends SparkTestBase {
     val sizes = DupGroups.dupComponentSizes(docs, minJaccard = 0.3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sizes == Map(0L -> 3L, 3L -> 1L))
-
-    // the minhash-edge scale path finds the same exact-dup structure
-    // (near-dup estimates may differ; exact copies always collide)
-    val approx = DupGroups.connectedComponents(
-        DupGroups.dupEdgesApprox(docs, minEstJaccard = 0.95),
-        docs.select(org.apache.spark.sql.functions.col("doc_id").as("id")))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(approx(1L) == 0L) // exact copy merged
-    assert(approx(3L) == 3L) // unrelated doc isolated
   }
 
-  test("null-text docs form one exact-dup group in both edge builders") {
+  test("null-text docs form one exact-dup group") {
     val docs = Seq(
       (0L, null.asInstanceOf[String], "en", "s0"),
       (1L, null.asInstanceOf[String], "en", "s0"),
@@ -46,11 +37,9 @@ class DupGroupsSpec extends SparkTestBase {
       (3L, "some real content here about engines", "en", "s0"))
       .toDF("doc_id", "text", "lang", "source")
     val nodes = docs.select(org.apache.spark.sql.functions.col("doc_id").as("id"))
-    for (edges <- Seq(DupGroups.dupEdges(docs), DupGroups.dupEdgesApprox(docs))) {
-      val comp = DupGroups.connectedComponents(edges, nodes)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(comp == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L),
-        "null-text docs must group together, matching exactDedup's groupBy")
-    }
+    val comp = DupGroups.connectedComponents(DupGroups.dupEdges(docs), nodes)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L),
+      "null-text docs must group together, matching exactDedup's groupBy")
   }
 }

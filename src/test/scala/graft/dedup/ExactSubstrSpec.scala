@@ -110,4 +110,27 @@ class ExactSubstrSpec extends SparkTestBase {
       ExactSubstr.duplicatedSpans(docs, 1)
     }
   }
+
+  test("span cut list and stripped corpus do not depend on partitioning") {
+    // every third doc carries one shared body between unique affixes;
+    // the rest are unique tokens and must yield no span at all
+    val body = "s1 s2 s3 s4 s5 s6"
+    val docs = (0 until 24).map { i =>
+      val u = (j: Int) => s"u${i}x$j"
+      (i.toLong,
+        if (i % 3 == 0) s"${u(0)} ${u(1)} $body ${u(2)}"
+        else (0 until 7).map(u).mkString(" "))
+    }.toDF("doc_id", "text")
+    def spans(d: org.apache.spark.sql.DataFrame) =
+      ExactSubstr.duplicatedSpans(d, K).collect().map(_.toSeq).toSet
+    def strip(d: org.apache.spark.sql.DataFrame) =
+      ExactSubstr.stripSpans(d, K).collect().map(_.toSeq).toSet
+    // one partition against about one doc per partition
+    val s1 = spans(docs.coalesce(1))
+    assert(s1 == spans(docs.repartition(24)), "span cut list depends on partitioning")
+    assert(strip(docs.coalesce(1)) == strip(docs.repartition(24)),
+      "stripped corpus depends on partitioning")
+    assert(s1.map(_.head) == (0L until 24L by 3L).toSet,
+      s"span coverage wrong: $s1")
+  }
 }

@@ -90,4 +90,22 @@ class PageRankSpec extends SparkTestBase {
     assert(r(1L) > r(4L) && r(2L) > r(5L),
       s"seed side must outrank the far triangle: $r")
   }
+
+  test("ranks agree across partitionings within 1e-9 and a planted hub ranks first") {
+    // every third edge points at hub 0; the rest spread over 40 nodes.
+    // Rank sums regroup with the partitioning, so agreement is a bound
+    val edges = (0 until 240).map { i =>
+      ((i * 13 + 7) % 41).toLong ->
+        (if (i % 3 == 0) 0L else ((i * 29 + 3) % 40 + 1).toLong)
+    }.filter(e => e._1 != e._2).toDF("src", "dst")
+      .groupBy("src", "dst").agg(count(lit(1)).as("weight"))
+    def ranks(parts: Int) =
+      PageRank.pagerank(edges.repartition(parts), iters = 5)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val (a, b) = (ranks(1), ranks(7))
+    assert(a.keySet == b.keySet && a.size == 41)
+    val maxDiff = a.map { case (n, r) => math.abs(r - b(n)) }.max
+    assert(maxDiff < 1e-9, s"ranks diverged across partitionings: max |Δ| = $maxDiff")
+    for (r <- Seq(a, b)) assert(r.maxBy(_._2)._1 == 0L, s"hub is not top-ranked: $r")
+  }
 }

@@ -14,19 +14,6 @@ class MultimodalSpec extends SparkTestBase {
     (1L, "short"),
     (2L, "")).toDF("doc_id", "text")
 
-  test("resize keeps every Nth byte and refreshes metadata") {
-    val resized = Multimodal.resizePayloads(Multimodal.withBinaryPayload(docs), factor = 4)
-    val r = resized.filter($"doc_id" === 0L).head()
-    val orig = r.getAs[Int]("orig_bytes")
-    val out = r.getAs[Array[Byte]]("payload")
-    assert(out.length == (orig + 3) / 4)
-    assert(r.getAs[org.apache.spark.sql.Row]("meta").getAs[String]("codec")
-      .endsWith("resized:4"))
-    // empty payload survives the stage
-    assert(resized.filter($"doc_id" === 2L).head()
-      .getAs[Array[Byte]]("payload").isEmpty)
-  }
-
   test("frame sampling explodes to every-Nth fixed-size chunks") {
     val frames = Multimodal.sampleFrames(Multimodal.withBinaryPayload(docs),
       frameBytes = 64, everyN = 2)
@@ -43,8 +30,9 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("stages compose: resize then extract features") {
+    val ids = Seq(0L, 7L, 15L).toDF("doc_id")
     val out = Multimodal.extractFeatures(
-      Multimodal.resizePayloads(Multimodal.withBinaryPayload(docs)))
+      Multimodal.resizeImagePayloads(Multimodal.withImagePayload(ids), factor = 2))
     assert(out.columns.toSeq ==
       Seq("doc_id", "n_bytes", "n_frames", "mean_byte", "first_byte"))
     assert(out.count() == 3)

@@ -37,4 +37,18 @@ class PqSpec extends SparkTestBase {
       .select("adc").head().getDouble(0)
     assert(math.abs(d01 - 125.0) < 1e-6, d01)
   }
+
+  test("codes do not depend on input partitioning under a fixed model") {
+    val model = Pq.train(corpus, m = 2, k = 3, seed = 7L)
+    // midpoints sit equidistant between two codewords: the tie-break
+    // must not depend on which partition a vector lands in
+    val probes = corpus.unionByName(
+      Seq((6L, vec(5, 0)), (7L, vec(15, 2.5)), (8L, vec(5, 2.5)))
+        .toDF("vec_id", "embedding"))
+    def codes(d: org.apache.spark.sql.DataFrame) = Pq.encode(d, model)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val one = codes(probes.coalesce(1))
+    assert(one.size == 9)
+    assert(one == codes(probes.repartition(4)), "codes depend on partitioning")
+  }
 }

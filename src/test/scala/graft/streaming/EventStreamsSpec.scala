@@ -116,22 +116,6 @@ class EventStreamsSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("file-source stream picks up new parquet files incrementally") {
-    val dir = tempDir("graft-stream")
-    val batch1 = sample.take(3)
-    batch1.toDF().write.parquet(s"$dir/in/b1.parquet")
-    val q = EventStreams.runFromParquetDir(spark, s"$dir/in/*.parquet",
-      s"$dir/in/b1.parquet", "file_stream_test")
-    try {
-      q.processAllAvailable()
-      assert(spark.table("file_stream_test").collect().map(_.getLong(2)).sum == 3)
-      // a new file arrives -> next micro-batch folds it in
-      sample.drop(3).toDF().write.parquet(s"$dir/in/b2.parquet")
-      q.processAllAvailable()
-      assert(spark.table("file_stream_test").collect().map(_.getLong(2)).sum == 5)
-    } finally q.stop()
-  }
-
   test("curated stream sink: drift-guarded landing, idempotent batch replay") {
     val dir = tempDir("graft-curated-stream")
     val path = s"$dir/curated"

@@ -16,7 +16,7 @@ class TextAnalysisSpec extends SparkTestBase {
 
   test("stopword ratio and punct ratio") {
     val r = Seq("the cat and the hat!").toDF("text")
-      .select(TextAnalysis.stopwordRatio(col("text")).as("s"),
+      .select(TextAnalysis.stopwordRatioOf(TextAnalysis.tokens(col("text"))).as("s"),
         TextAnalysis.punctRatio(col("text")).as("p"))
       .collect().head
     assert(math.abs(r.getDouble(0) - 3.0 / 5.0) < 1e-9) // the, and, the

@@ -96,4 +96,16 @@ class UnigramTokenizerSpec extends SparkTestBase {
     val b = UnigramTokenizer.vocabTable(docs.repartition(7)).collect().toSeq
     assert(a == b)
   }
+
+  test("vocabulary is the same on a corpus and on its x10 replication") {
+    // seedMultis = 6 makes the seed cut and every EM prune bite
+    val p = UnigramTokenizer.Params(seedMultis = 6)
+    val x10 = (0 until 10).map(k => docs.withColumn("doc_id", col("doc_id") + k * 100L))
+      .reduce(_ unionByName _)
+    def pieces(d: org.apache.spark.sql.DataFrame) = UnigramTokenizer.train(d, p)._1
+      .select("piece").collect().map(_.getString(0)).toSet
+    val v1 = pieces(docs)
+    assert(v1.exists(_.length > 1), s"no multi-char piece survived: $v1")
+    assert(v1 == pieces(x10), "vocabulary changed with corpus size")
+  }
 }
