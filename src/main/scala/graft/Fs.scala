@@ -18,4 +18,26 @@ object Fs {
         .foreach(p => try Files.deleteIfExists(p) catch { case _: Throwable => () })
     } finally s.close()
   }
+
+  // JVM-exit cleanup: every test/CLI JVM otherwise leaves its temp dirs
+  // (warehouses incl. full bucketed-table copies, spec scratch) behind in
+  // /tmp. ONE static hook drains a queue — per-call hooks would
+  // accumulate an unbounded thread per call in a long-lived driver.
+  private val toDelete = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  private lazy val hookInstalled: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      var p = toDelete.poll()
+      while (p != null) {
+        try deleteRecursively(p) catch { case _: Throwable => () }
+        p = toDelete.poll()
+      }
+    }))
+
+  /** A fresh temp directory, deleted recursively at JVM exit. */
+  def tempDirDeletedAtExit(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    hookInstalled
+    toDelete.add(d)
+    d
+  }
 }

@@ -35,21 +35,6 @@ object GraftSession {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-  // JVM-exit cleanup: every test/CLI JVM otherwise leaves its temp
-  // warehouse (incl. full bucketed-table copies) behind in /tmp. ONE
-  // static hook drains a queue of warehouse paths — per-call hooks would
-  // accumulate an unbounded thread per local() in a long-lived driver.
-  private val warehousesToClean =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val cleanupHookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var p = warehousesToClean.poll()
-      while (p != null) {
-        try Fs.deleteRecursively(p) catch { case _: Throwable => () }
-        p = warehousesToClean.poll()
-      }
-    }))
-
   /** Session for `spark-submit` deployments: the same engine tuning, with
     * master/resources/deploy-mode left to the submit command (cluster
     * managers inject `spark.master` into system properties). Falls back
@@ -70,9 +55,7 @@ object GraftSession {
   /** Local session for tests / CLI runs. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    cleanupHookInstalled
-    warehousesToClean.add(warehouse)
+    val warehouse = Fs.tempDirDeletedAtExit("graft-warehouse")
     val s = tune(
       SparkSession.builder()
         .master(s"local[$cores]")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.sources.{CuratedWriter, Manifest}
-import graft.taxi.{Cleaning, SchemaNormalizer}
+import graft.taxi.SchemaNormalizer
 
 /** The batch driver re-expressed (SURVEY §3.3,
   * `scripts/batch_etl_simple.py`): the reference enumerates S3 keys with
@@ -48,10 +48,8 @@ object BatchRunner {
       loads.foreach(record(_, None))
       throw new IllegalArgumentException(s"no readable cab types under $input")
     }
-    val all = SchemaNormalizer.unionCanonical(frames)
-    val cleaned = Cleaning.withRatios(
-      Cleaning.withTimeFeatures(Cleaning.clean(all)))
-    CuratedWriter.writeCurated(cleaned, output)
+    CuratedWriter.writeCurated(
+      EtlJob.curate(SchemaNormalizer.unionCanonical(frames)), output)
     val counts = CuratedWriter.readCurated(spark, output)
       .groupBy("cab_type").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.GraftSession
 import graft.sources.CuratedWriter
@@ -28,10 +28,14 @@ object EtlJob {
   /** The full raw→curated transform chain (normalize → clean → derive),
     * factored out so correctness gates exercise the exact code path the
     * CLI runs, not a parallel reimplementation. */
-  def transform(raw: org.apache.spark.sql.DataFrame, cabType: String): org.apache.spark.sql.DataFrame =
-    Cleaning.withRatios(
-      Cleaning.withTimeFeatures(Cleaning.clean(
-        SchemaNormalizer.toCanonical(raw, cabType))))
+  def transform(raw: DataFrame, cabType: String): DataFrame =
+    curate(SchemaNormalizer.toCanonical(raw, cabType))
+
+  /** clean → derive over canonical-schema trips: [[transform]] after
+    * normalization, which [[BatchRunner]] runs once over its union of
+    * normalized cab frames. */
+  def curate(canonical: DataFrame): DataFrame =
+    Cleaning.withRatios(Cleaning.withTimeFeatures(Cleaning.clean(canonical)))
 
   def run(spark: SparkSession, input: String, output: String, cabType: String): Long = {
     val raw = spark.read.parquet(input)

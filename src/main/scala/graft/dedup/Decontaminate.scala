@@ -50,14 +50,14 @@ object Decontaminate {
     * Error direction is the SAFE one for decontamination: false
     * positives over-remove training docs (bounded by `fpp` per probe),
     * false negatives cannot happen — every truly contaminated doc is
-    * caught. `fpp` defaults to 1e-6 because a doc makes ~one probe per
+    * caught. `fpp` is fixed at 1e-6 because a doc makes ~one probe per
     * token: at 1e-2 a 50-shingle doc would be spuriously flagged with
     * probability ≈ 0.4, at 1e-6 ≈ 5e-5. The per-shingle membership probe
     * is the codegen'd [[graft.functions.HashExpressions.BloomMightContain]]
     * expression (Spark exposes no public bloom-membership function), so
     * the corpus-side filter stays inside whole-stage codegen. */
-  def contaminatedIdsBloom(docs: DataFrame, evalDocs: DataFrame, k: Int = 8,
-                           fpp: Double = 1e-6): DataFrame = {
+  def contaminatedIdsBloom(docs: DataFrame, evalDocs: DataFrame,
+                           k: Int = 8): DataFrame = {
     val evalSh = evalDocs
       .select(explode(graft.functions.HashExpressions
         .shingleHashes(col("text"), k, fnv = true)).as("sh"))
@@ -75,7 +75,7 @@ object Decontaminate {
     val bf =
       try {
         val expected = math.max(4096L, evalSh.distinct().count())
-        evalSh.stat.bloomFilter("sh", expected, fpp)
+        evalSh.stat.bloomFilter("sh", expected, 1e-6)
       } finally evalSh.unpersist()
     // Codegen'd native probe (HashExpressions.BloomMightContain) — the
     // broadcast handle lives inside the expression; ContextCleaner
@@ -106,10 +106,9 @@ object Decontaminate {
     * explode; the final aggregation's cardinality is bounded by
     * |sources| × |eval sets|. */
   def contaminationMatrix(docs: DataFrame, evalDocs: DataFrame,
-                          evalLabelCol: String = "eval_set",
                           k: Int = 8): DataFrame = {
     val evalSh = evalDocs
-      .select(col(evalLabelCol).as("eval_set"),
+      .select(col("eval_set"),
         explode(graft.functions.HashExpressions
           .shingleHashes(col("text"), k, fnv = true)).as("sh"))
       .distinct()

@@ -3,6 +3,9 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.CuratedWriter.{hadoopFs, nextVersion, readPointer,
+  versions, writePointer}
+
 /** Deduplication operators for large-corpus training-data pipelines:
   * exact, MinHash+LSH, SimHash, and n-gram Jaccard (SURVEY §7.4 item 6).
   *
@@ -15,6 +18,13 @@ import org.apache.spark.sql.functions._
   * keys.
   */
 object Dedup {
+
+  /** Word shingle width, MinHash signature length, LSH band count and the
+    * bucket size past which a band bucket degrades to star pairs. */
+  val ShingleK = 3
+  val NumHashes = 64
+  val Bands = 16
+  val MaxBucket = 64
 
   /** Exact dedup via hash groupBy: canonical representative = min doc_id
     * per distinct text (deterministic, unlike `dropDuplicates`). */
@@ -295,23 +305,24 @@ object Dedup {
         (col("_n_lines") - coalesce(col("n_kept"), lit(0L))).as("n_dropped"))
   }
 
-  /** Word k-shingles, distinct per doc. Built by zipping k SHIFTED
-    * SLICES of the token array positionally — the tokenize expression
-    * evaluates O(k) times per document. (The `transform(sequence(...),
-    * i => slice(toks, i+1, k))` form re-evaluated the split+filter at
-    * every shingle position — Catalyst inlines the array expression
-    * into each slice call — O(len²) string work per doc across every
-    * MinHash/decontamination/Jaccard caller.) */
-  def shingles(text: Column, k: Int = 3): Column = {
+  /** Word k-shingles (k = [[ShingleK]]), distinct per doc. Built by
+    * zipping k SHIFTED SLICES of the token array positionally — the
+    * tokenize expression evaluates O(k) times per document. (The
+    * `transform(sequence(...), i => slice(toks, i+1, k))` form
+    * re-evaluated the split+filter at every shingle position —
+    * Catalyst inlines the array expression into each slice call —
+    * O(len²) string work per doc across every MinHash/decontamination/
+    * Jaccard caller.) */
+  def shingles(text: Column): Column = {
     val toks = filter(split(text, " "), t => length(t) > 0)
     val n = size(toks)
-    val first = slice(toks, lit(1), n - (k - 1))
-    val joined = (1 until k).foldLeft(first) { (acc, j) =>
-      zip_with(acc, slice(toks, lit(j + 1), n - (k - 1)),
+    val first = slice(toks, lit(1), n - (ShingleK - 1))
+    val joined = (1 until ShingleK).foldLeft(first) { (acc, j) =>
+      zip_with(acc, slice(toks, lit(j + 1), n - (ShingleK - 1)),
         (a, b) => concat(a, lit(" "), b))
     }
     array_distinct(
-      when(n >= k, joined)
+      when(n >= ShingleK, joined)
         .otherwise(array(concat_ws(" ", toks))))
   }
 
@@ -386,8 +397,7 @@ object Dedup {
     * through the hub). Direct pairwise estimates between non-hub members
     * of oversized buckets are intentionally not enumerated. */
   def minhashNearDups(documents: DataFrame, numHashes: Int = 64,
-                      bands: Int = 16, shingleK: Int = 3,
-                      maxBucket: Int = 64,
+                      bands: Int = 16, maxBucket: Int = 64,
                       reproducible: Boolean = false): DataFrame = {
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes) evenly — " +
@@ -397,7 +407,7 @@ object Dedup {
     // once — signatures are 8·k bytes/doc, orders of magnitude smaller
     // than the corpus.
     val sigs = minhashSignatures(
-      graft.operators.Partitioning.spread(documents), numHashes, shingleK,
+      graft.operators.Partitioning.spread(documents), numHashes, ShingleK,
       reproducible).persist()
     val banded = bandedKeys(sigs, numHashes, bands, reproducible)
     val buckets = banded.groupBy("band", "band_hash")
@@ -471,18 +481,15 @@ object Dedup {
     * pattern; here both sides are computed fresh for gate
     * determinism. */
   def crossCorpusNearDups(incoming: DataFrame, corpus: DataFrame,
-                          numHashes: Int = 64, bands: Int = 16,
-                          shingleK: Int = 3, maxBucket: Int = 64,
+                          maxBucket: Int = 64,
                           reproducible: Boolean = false): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) evenly")
-    val sigsIn = minhashSignatures(incoming, numHashes, shingleK, reproducible)
+    val sigsIn = minhashSignatures(incoming, NumHashes, ShingleK, reproducible)
       .persist()
     val sigsC = minhashSignatures(
-      graft.operators.Partitioning.spread(corpus), numHashes, shingleK,
+      graft.operators.Partitioning.spread(corpus), NumHashes, ShingleK,
       reproducible).persist()
-    val bIn = bandedKeys(sigsIn, numHashes, bands, reproducible)
-    val bC = bandedKeys(sigsC, numHashes, bands, reproducible)
+    val bIn = bandedKeys(sigsIn, NumHashes, Bands, reproducible)
+    val bC = bandedKeys(sigsC, NumHashes, Bands, reproducible)
     val bucketsC = bC.groupBy("band", "band_hash")
       .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
     val smallC = bC.join(bucketsC, Seq("band", "band_hash"))
@@ -503,7 +510,7 @@ object Dedup {
         "doc_corpus")
       .select(col("doc_in"), col("doc_corpus"),
         (size(filter(zip_with(col("sig_i"), col("sig_c"), (x, y) => x === y),
-          eq => eq)).cast("double") / numHashes).as("est_jaccard"))
+          eq => eq)).cast("double") / NumHashes).as("est_jaccard"))
     val out = scored.localCheckpoint(eager = true)
     sigsIn.unpersist(); sigsC.unpersist()
     out
@@ -524,11 +531,8 @@ object Dedup {
   /** Build the corpus band index once per snapshot — the same
     * signature/banding/bucket computation [[crossCorpusNearDups]] runs
     * inline, factored out so it can be [[saveBandIndex]]d. */
-  def buildBandIndex(corpus: DataFrame, numHashes: Int = 64,
-                     bands: Int = 16, shingleK: Int = 3,
+  def buildBandIndex(corpus: DataFrame,
                      reproducible: Boolean = false): BandIndex = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) evenly")
     // LAZY localCheckpoint: every consumer of a fresh index (a save's
     // three table writes, a screen's four corpus-side checkpoints)
     // otherwise re-runs the corpus-sized shingle+signature pass per
@@ -539,12 +543,12 @@ object Dedup {
     // sharing it). Lazy, not eager: no extra job when the first
     // consumer materializes anyway.
     val sigs = minhashSignatures(
-      graft.operators.Partitioning.spread(corpus), numHashes, shingleK,
+      graft.operators.Partitioning.spread(corpus), NumHashes, ShingleK,
       reproducible).localCheckpoint(eager = false)
-    val banded = bandedKeys(sigs, numHashes, bands, reproducible)
+    val banded = bandedKeys(sigs, NumHashes, Bands, reproducible)
     val buckets = banded.groupBy("band", "band_hash")
       .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
-    BandIndex(sigs, banded, buckets, numHashes, bands, shingleK, reproducible)
+    BandIndex(sigs, banded, buckets, NumHashes, Bands, ShingleK, reproducible)
   }
 
   /** Fold a new batch of documents INTO an existing band index — the
@@ -638,19 +642,20 @@ object Dedup {
     * <root>/v=<k>/{signatures,bands,buckets}/batch=<n>/
     * }}}
     *
-    * Every commit is a pointer flipped tmp-then-rename (the
-    * `CuratedWriter.publishVersion` pattern): `saveBandIndex` writes a
-    * FRESH version tree holding the whole index as `batch=0` and flips
-    * `_LATEST`; [[appendBandIndex]] writes ONLY the new batch's rows
-    * into the current version and flips that version's `_BATCHES`
-    * (batch-sized IO — saving the folded index per batch would rewrite
-    * the full accumulated corpus every time, quadratic total write
-    * volume over an ingest); [[snapshotBandIndex]] folds a long append
-    * chain back to one batch in a NEW version (bounded read
-    * amplification), leaving prior versions pinnable until
-    * [[vacuumBandIndex]]. A crash before a pointer flip leaves an
-    * orphan directory no pointer names — invisible to loads, skipped
-    * by the next save's version numbering, reclaimed by vacuum.
+    * Every commit is a pointer flipped tmp-then-rename (the layout
+    * `CuratedWriter.publishVersion` uses, through the same helpers):
+    * `saveBandIndex` writes a FRESH version tree holding the whole
+    * index as `batch=0` and flips `_LATEST`; [[appendBandIndex]] writes
+    * ONLY the new batch's rows into the current version and flips that
+    * version's `_BATCHES` (batch-sized IO — saving the folded index
+    * per batch would rewrite the full accumulated corpus every time,
+    * quadratic total write volume over an ingest);
+    * [[snapshotBandIndex]] folds a long append chain back to one batch
+    * in a NEW version (bounded read amplification), leaving prior
+    * versions pinnable until [[vacuumBandIndex]]. A crash before a
+    * pointer flip leaves an orphan directory no pointer names —
+    * invisible to loads, skipped by the next save's version numbering,
+    * reclaimed by vacuum.
     *
     * Long arrays and band keys round-trip parquet bit-exactly, so a
     * reloaded index screens IDENTICALLY to a fresh one (gate io16 pins
@@ -660,12 +665,7 @@ object Dedup {
   def saveBandIndex(index: BandIndex, path: String): Int = {
     val spark = index.signatures.sparkSession
     val fs = hadoopFs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    fs.mkdirs(root)
-    val existing =
-      fs.listStatus(root).map(_.getPath.getName)
-        .filter(_.startsWith("v=")).map(_.drop(2).toInt)
-    val next = if (existing.isEmpty) 1 else existing.max + 1
+    val next = nextVersion(fs, path)
     val vdir = s"$path/v=$next"
     // Signatures first, ALONE: for a fresh or compacted index every
     // other table derives from the (lazily checkpointed) signature
@@ -752,11 +752,9 @@ object Dedup {
                       path: String): Int = {
     val fs = hadoopFs(spark, path)
     val latest = readPointer(fs, path, "_LATEST")
-    val old = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .map(_.getPath).filter { p =>
-        p.getName.startsWith("v=") && p.getName.drop(2).toInt != latest
-      }
-    old.foreach(p => fs.delete(p, true))
+    val old = versions(fs, path).filter(_ != latest)
+    old.foreach(v =>
+      fs.delete(new org.apache.hadoop.fs.Path(path, s"v=$v"), true))
     old.length
   }
 
@@ -847,38 +845,6 @@ object Dedup {
       p.getAs[Int]("shingle_k"), p.getAs[Boolean]("reproducible"))
   }
 
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-                       path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Commit `value` under `dir/name`: write `<name>.tmp`, rename over
-    * `<name>` — atomic on HDFS/local; a one-object PUT on stores
-    * without atomic rename (the `publishVersion` pattern). */
-  private def writePointer(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: String, name: String, value: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    fs.mkdirs(root)
-    val tmp = new Path(root, s"$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(value.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(root, name)
-    fs.delete(ptr, false)
-    if (!fs.rename(tmp, ptr))
-      throw new java.io.IOException(
-        s"band index: pointer flip $tmp -> $ptr failed")
-  }
-
-  /** The committed value the `dir/name` pointer names. */
-  private def readPointer(fs: org.apache.hadoop.fs.FileSystem,
-                          dir: String, name: String): Int = {
-    val ptr = new org.apache.hadoop.fs.Path(dir, name)
-    val in = fs.open(ptr)
-    try new String(in.readAllBytes(), "UTF-8").trim.toInt
-    finally in.close()
-  }
-
   /** Screen an incoming batch against a (possibly reloaded) corpus band
     * index — the incremental form of [[crossCorpusNearDups]]: incoming
     * docs are signed and banded with the INDEX's parameters, candidates
@@ -887,20 +853,19 @@ object Dedup {
     * and signature agreement scores against the stored signatures.
     * Output schema and semantics are exactly [[crossCorpusNearDups]]'s
     * — one oracle pins both. */
-  def screenAgainstIndex(incoming: DataFrame, index: BandIndex,
-                         maxBucket: Int = 64): DataFrame = {
+  def screenAgainstIndex(incoming: DataFrame, index: BandIndex): DataFrame = {
     val sigsIn = minhashSignatures(incoming, index.numHashes, index.shingleK,
       index.reproducible).persist()
     val bIn = bandedKeys(sigsIn, index.numHashes, index.numBands,
       index.reproducible)
     val smallC = index.bands.join(index.buckets, Seq("band", "band_hash"))
-      .filter(col("bsz") <= maxBucket)
+      .filter(col("bsz") <= MaxBucket)
       .select(col("band"), col("band_hash"), col("doc_id"))
     val candSmall = bIn.join(smallC
         .withColumnRenamed("doc_id", "doc_corpus"),
         Seq("band", "band_hash"))
       .select(col("doc_id").as("doc_in"), col("doc_corpus"))
-    val candStar = bIn.join(index.buckets.filter(col("bsz") > maxBucket),
+    val candStar = bIn.join(index.buckets.filter(col("bsz") > MaxBucket),
         Seq("band", "band_hash"))
       .select(col("doc_id").as("doc_in"), col("rep").as("doc_corpus"))
     val candidates = candSmall.union(candStar).distinct()
@@ -942,7 +907,6 @@ object Dedup {
     * [[minhashNearDups]] — the same degenerate-cluster blowup applies
     * (b²/2 pairs per bucket per band). */
   def simhashNearDups(documents: DataFrame, maxHamming: Int = 3,
-                      maxBucket: Int = 64,
                       reproducible: Boolean = false): DataFrame = {
     val sh = withSimhash(graft.operators.Partitioning.spread(documents), reproducible)
       .select("doc_id", "simhash")
@@ -953,7 +917,7 @@ object Dedup {
     val buckets = banded.groupBy("band", "chunk")
       .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
     val withSize = banded.join(buckets, Seq("band", "chunk"))
-    val small = withSize.filter(col("bsz") <= maxBucket)
+    val small = withSize.filter(col("bsz") <= MaxBucket)
     val a = small.select(col("band"), col("chunk"),
       col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
     val b = small.select(col("band"), col("chunk"),
@@ -964,7 +928,7 @@ object Dedup {
     // star pairs need the hub's simhash re-attached for verification
     val hubs = sh.select(col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
     val candStar = withSize
-      .filter(col("bsz") > maxBucket && col("doc_id") =!= col("rep"))
+      .filter(col("bsz") > MaxBucket && col("doc_id") =!= col("rep"))
       .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"),
         col("simhash").as("sh_b"))
       .join(hubs, "doc_a")
@@ -982,10 +946,10 @@ object Dedup {
     * to 64-bit ints before the join, so the O(pairs) intersect/union
     * work compares fixed-width longs instead of re-hashing strings
     * (collision odds at 64 bits are negligible for Jaccard). */
-  def ngramJaccardPairs(documents: DataFrame, shingleK: Int = 3): DataFrame = {
+  def ngramJaccardPairs(documents: DataFrame): DataFrame = {
     val d = graft.operators.Partitioning.spread(documents)
       .select(col("doc_id"), col("source"),
-      graft.functions.HashExpressions.shingleHashes(col("text"), shingleK).as("sh"))
+      graft.functions.HashExpressions.shingleHashes(col("text"), ShingleK).as("sh"))
       .withColumn("n", size(col("sh")))
     val a = d.select(col("source"), col("doc_id").as("doc_a"),
       col("sh").as("sh_a"), col("n").as("n_a"))
@@ -1003,11 +967,11 @@ object Dedup {
           .as("jaccard"))
   }
 
-  /** Top-N most similar same-source pairs by exact shingle Jaccard. */
-  def topJaccardPairs(documents: DataFrame, n: Int = 20): DataFrame =
+  /** Top-20 most similar same-source pairs by exact shingle Jaccard. */
+  def topJaccardPairs(documents: DataFrame): DataFrame =
     ngramJaccardPairs(documents)
       .orderBy(desc("jaccard"), asc("doc_a"), asc("doc_b"))
-      .limit(n)
+      .limit(20)
 
   /** Corpus-wide exact-Jaccard threshold join via PREFIX FILTERING
     * (Chaudhuri et al., "A primitive operator for similarity joins in
@@ -1060,13 +1024,15 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
+  private val NeighborhoodWindow = 3
+
   /** Sorted-neighborhood near-dup blocking (Hernández & Stolfo, "The
     * merge/purge problem for large databases", SIGMOD 1995) — the third
     * classic blocking family next to LSH ([[minHashCandidates]]) and
     * length-banding: sort each block (`lang`) by a cheap proxy key
     * (`n_chars`, id tiebreak) and compare every record only with its
-    * next `window` neighbors in that order. Candidate work is
-    * rows·window — LINEAR in corpus size with a constant chosen up
+    * next `NeighborhoodWindow` (3) neighbors in that order. Candidate work
+    * is rows·window — LINEAR in corpus size with a constant chosen up
     * front, where LSH's cost rides on band-collision rates; near-dups
     * with similar lengths land adjacent, which is exactly the
     * regime (truncation/suffix edits) the length proxy captures.
@@ -1074,23 +1040,22 @@ object Dedup {
     * One shuffle (the per-block sort); the neighbor expansion is
     * `lead(..., k)` over the sorted window — no self-join. Pairs are
     * scored with the same sorted-shingle-hash merge intersection as
-    * [[ngramJaccardPairs]] and thresholded on the rounded value, so a
-    * SQL oracle replays the arithmetic exactly. */
-  def sortedNeighborhoodPairs(documents: DataFrame, window: Int = 3,
-                              minJaccard: Double = 0.2,
-                              shingleK: Int = 3): DataFrame = {
+    * [[ngramJaccardPairs]] and thresholded at 0.2 on the rounded value,
+    * so a SQL oracle replays the arithmetic exactly. */
+  def sortedNeighborhoodPairs(documents: DataFrame): DataFrame = {
     val d = graft.operators.Partitioning.spread(documents)
       .select(col("doc_id"), col("lang"), col("n_chars"),
-        graft.functions.HashExpressions.shingleHashes(col("text"), shingleK).as("sh"))
+        graft.functions.HashExpressions.shingleHashes(col("text"), ShingleK)
+          .as("sh"))
       .withColumn("n", size(col("sh")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy("n_chars", "doc_id")
-    val withLeads = (1 to window).foldLeft(d) { (df, k) =>
+    val withLeads = (1 to NeighborhoodWindow).foldLeft(d) { (df, k) =>
       df.withColumn(s"_id$k", lead("doc_id", k).over(w))
         .withColumn(s"_sh$k", lead("sh", k).over(w))
         .withColumn(s"_n$k", lead("n", k).over(w))
     }
-    val pairs = (1 to window).map { k =>
+    val pairs = (1 to NeighborhoodWindow).map { k =>
       withLeads.filter(col(s"_id$k").isNotNull).select(
         col("lang"),
         least(col("doc_id"), col(s"_id$k")).as("doc_a"),
@@ -1103,7 +1068,7 @@ object Dedup {
       .select(col("lang"), col("doc_a"), col("doc_b"),
         round(col("inter").cast("double")
           / (col("n") + col("nk") - col("inter")), 6).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+      .filter(col("jaccard") >= 0.2)
       .orderBy("lang", "doc_a", "doc_b")
   }
 }

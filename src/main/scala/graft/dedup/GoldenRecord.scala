@@ -31,10 +31,10 @@ object GoldenRecord {
     * census: cluster count, merged-row count (rows living in a
     * cluster of size ≥ 2), duplicate rows retired (members − clusters),
     * and the id-sum of elected canonicals for membership pinning.
-    * `minJw` is compared on the ROUNDED similarity so a SQL oracle
-    * replays the threshold exactly. */
+    * The 0.95 Jaro-Winkler threshold is compared on the ROUNDED
+    * similarity so a SQL oracle replays the threshold exactly. */
   def censusByBlock(df: DataFrame, blockCol: String, nameCol: String,
-                    idCol: String, minJw: Double = 0.95): DataFrame = {
+                    idCol: String): DataFrame = {
     val w = Window.partitionBy(blockCol).orderBy(nameCol, idCol)
     val scored = df.select(col(blockCol), col(nameCol), col(idCol))
       .withColumn("_prev", lag(col(nameCol), 1).over(w))
@@ -42,7 +42,7 @@ object GoldenRecord {
         .jaroWinkler(col("_prev"), col(nameCol)), 6))
       // a row STARTS a new cluster unless it matches its predecessor
       .withColumn("_new",
-        when(col("_jw").isNull || col("_jw") < minJw, 1L).otherwise(0L))
+        when(col("_jw").isNull || col("_jw") < 0.95, 1L).otherwise(0L))
       .withColumn("_cl",
         sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0)))
     val clusters = scored.groupBy(col(blockCol), col("_cl"))

@@ -103,7 +103,7 @@ object Linkage {
     * Σ_{e,b} C(c,2) from the (entity, block) census — three aggregation
     * passes, each output-bounded, at ANY corpus size. */
   def blockingQuality(records: DataFrame, blockCol: String,
-                      entityCol: String, digits: Int = 6): DataFrame = {
+                      entityCol: String): DataFrame = {
     def pairsOf(c: Column) = (c * (c - 1) / 2).cast("long")
     val n = records.agg(count(lit(1)).as("_n"))
       .select(col("_n"), pairsOf(col("_n")).as("_all"))
@@ -122,10 +122,10 @@ object Linkage {
         col("_cand").as("n_candidates"), col("_true").as("n_true_pairs"),
         col("_cap").as("n_captured"),
         when(col("_all") > 0,
-          round(lit(1.0) - col("_cand") / col("_all").cast("double"), digits))
+          round(lit(1.0) - col("_cand") / col("_all").cast("double"), 6))
           .as("reduction_ratio"),
         when(col("_true") > 0,
-          round(col("_cap") / col("_true").cast("double"), digits))
+          round(col("_cap") / col("_true").cast("double"), 6))
           .as("pairs_completeness"))
   }
 
@@ -145,8 +145,7 @@ object Linkage {
     * census with each pattern's posterior match probability plus the
     * fitted parameters as `param`/`value` rows appended. */
   def emFit(records: DataFrame, idCol: String, blockCol: String,
-            fields: Seq[(String, Column)], iters: Int = 3,
-            digits: Int = 6): DataFrame = {
+            fields: Seq[(String, Column)], iters: Int = 3): DataFrame = {
     require(fields.lengthCompare(6) <= 0,
       s"emFit: at most 6 fields (2^k census), got ${fields.length}")
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -179,7 +178,7 @@ object Linkage {
         .map(i => census(i)._2 * (1.0 - w(i)) * census(i)._1(f)).sum / su)
     }
     def r6(x: Double) = BigDecimal(x)
-      .setScale(digits, BigDecimal.RoundingMode.HALF_UP).toDouble
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val patternRows = census.indices.map { i =>
       val (g, c) = census(i)
       Row.fromSeq(Seq("pattern:" + g.mkString(""), c.toDouble, r6(w(i))))

@@ -1154,19 +1154,6 @@ object TextGates extends Catalog {
     (base +: rounds).mkString(",\n         ")
   }
 
-  /** Full SQL replay of [[graft.text.UnigramTokenizer.train]] — seed,
-    * `rounds` hard-EM Viterbi rounds, count-rank pruning — as one CTE
-    * chain. The Viterbi DP and its backtrack are UNROLLED one CTE per
-    * word position (the `maxWordLen` cap is what makes that static),
-    * with the same padded `(end,len)` score-grid indexing, the same
-    * `(total, len)`-struct argmax tie-break (`list_max`), and the same
-    * fixed-point `floor(2^20·ln((cnt+1)/(T+|V|)))` scores, so every DP
-    * comparison and the corpus likelihood are exact integer arithmetic
-    * in both engines. Invalid grid slots carry a −2^40 sentinel score
-    * (any candidate touching one loses to every real segmentation;
-    * single-char coverage guarantees a real one exists), mirroring the
-    * engine's null-filtered candidates. MATERIALIZED is load-bearing
-    * exactly as in [[bpeRoundsSql]]. */
   /** The unrolled Viterbi DP + backtrack CTE block shared by the
     * training rounds and the cross-corpus encode pass: `dpP_0..W`
     * build the per-position (total, backlen) lists over a garr-shaped
@@ -1202,11 +1189,24 @@ object TextGates extends Catalog {
          list_reverse(pieces) AS pieces FROM ${bkP}_$W)"""
   }
 
-  private def unigramRoundsSql(rounds: Int = 3, maxPieceLen: Int = 4,
-                               maxWordLen: Int = 16,
-                               seedMultis: Int = 256): String = {
-    val L = maxPieceLen
-    val W = maxWordLen
+  /** Full SQL replay of [[graft.text.UnigramTokenizer.train]] under the
+    * default `Params` — seed, `emRounds` hard-EM Viterbi rounds,
+    * count-rank pruning — as one CTE chain. The Viterbi DP and its
+    * backtrack are UNROLLED one CTE per word position (the `maxWordLen`
+    * cap is what makes that static),
+    * with the same padded `(end,len)` score-grid indexing, the same
+    * `(total, len)`-struct argmax tie-break (`list_max`), and the same
+    * fixed-point `floor(2^20·ln((cnt+1)/(T+|V|)))` scores, so every DP
+    * comparison and the corpus likelihood are exact integer arithmetic
+    * in both engines. Invalid grid slots carry a −2^40 sentinel score
+    * (any candidate touching one loses to every real segmentation;
+    * single-char coverage guarantees a real one exists), mirroring the
+    * engine's null-filtered candidates. MATERIALIZED is load-bearing
+    * exactly as in [[bpeRoundsSql]]. */
+  private def unigramRoundsSql(): String = {
+    val params = graft.text.UnigramTokenizer.Params()
+    val L = params.maxPieceLen
+    val W = params.maxWordLen
     val SENT = "-1099511627776" // -2^40
     val base =
       s"""uw AS MATERIALIZED (SELECT word, freq, CAST(len(word) AS INT) AS n
@@ -1222,17 +1222,17 @@ object TextGates extends Catalog {
            UNION ALL
            SELECT piece, cnt FROM (SELECT piece, cnt FROM useed
              WHERE len(piece) > 1 ORDER BY cnt DESC, piece
-             LIMIT $seedMultis)),
+             LIMIT ${params.seedMultis})),
          ugrid AS MATERIALIZED (SELECT word, freq, n, i, l,
              CASE WHEN l <= i AND i <= n
                   THEN substr(word, i - l + 1, l) END AS piece
            FROM uw, range(1, ${W + 1}) t1(i), range(1, ${L + 1}) t2(l))"""
-    var keep = seedMultis
-    val roundCtes = (1 to rounds).map { r =>
+    var keep = params.seedMultis
+    val roundCtes = (1 to params.emRounds).map { r =>
       val p = r - 1
       val dpLayers = viterbiDpSql(s"ud$r", s"ub$r", s"ug$r", W, L)
       val pruneSel =
-        if (r < rounds) {
+        if (r < params.emRounds) {
           keep = keep * 3 / 4
           s"""SELECT piece, cnt FROM ur$r WHERE len(piece) = 1
              UNION ALL

@@ -29,8 +29,7 @@ object GraphStats {
     * One degree aggregation, one filtered scalar aggregate; the only
     * floats are the final logs. Output: (kmin, n_tail, max_degree,
     * alpha). */
-  def powerLawAlpha(edges: DataFrame, kmin: Int = 2,
-                    digits: Int = 6): DataFrame = {
+  def powerLawAlpha(edges: DataFrame, kmin: Int = 2): DataFrame = {
     require(kmin >= 1, s"kmin must be >= 1, got $kmin")
     val e = edges
       .select(least(col("src"), col("dst")).as("a"),
@@ -47,7 +46,7 @@ object GraphStats {
       .agg(count(lit(1)).as("n_tail"), max("deg").as("max_degree"),
         sum(log(col("deg").cast("double") / lit(kmin - 0.5))).as("_s"))
       .select(lit(kmin).as("kmin"), col("n_tail"), col("max_degree"),
-        round(lit(1.0) + col("n_tail").cast("double") / col("_s"), digits)
+        round(lit(1.0) + col("n_tail").cast("double") / col("_s"), 6)
           .as("alpha"))
   }
 
@@ -61,8 +60,7 @@ object GraphStats {
     * modularity read-out is one degree aggregate, two node-keyed label
     * joins over the edge list, and a community-cardinality roll-up.
     * All counts integer; only the final Q arithmetic is float. */
-  def modularity(edges: DataFrame, rounds: Int = 4,
-                 digits: Int = 6): DataFrame = {
+  def modularity(edges: DataFrame, rounds: Int = 4): DataFrame = {
     val und = edges
       .select(col("src").cast("long").as("s"), col("dst").cast("long").as("d"))
       .filter(col("s") =!= col("d"))
@@ -93,7 +91,7 @@ object GraphStats {
         .crossJoin(broadcast(m1))
         .agg(count(lit(1)).as("n_communities"),
           max(col("m")).cast("long").as("n_edges"),
-          round(sum(term), digits).as("modularity"))
+          round(sum(term), 6).as("modularity"))
         .localCheckpoint(true)
     } finally und.unpersist()
   }
@@ -103,7 +101,7 @@ object GraphStats {
     * one row: (n_nodes, n_edges, assortativity rounded to `digits`) —
     * corr computed over BOTH orientations of every edge, the standard
     * undirected formulation. */
-  def degreeAssortativity(edges: DataFrame, digits: Int = 6): DataFrame = {
+  def degreeAssortativity(edges: DataFrame): DataFrame = {
     val e = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -137,7 +135,7 @@ object GraphStats {
       val (cov, vx, vy) = (covar_pop(dx, dy), var_pop(dx), var_pop(dy))
       both.agg(
           count(lit(1)).as("n_endpoints"),
-          when(vx > 0 && vy > 0, round(cov / sqrt(vx * vy), digits))
+          when(vx > 0 && vy > 0, round(cov / sqrt(vx * vy), 6))
             .as("assortativity"))
         .crossJoin(broadcast(e.agg(count(lit(1)).as("n_edges"))))
         .select(col("n_edges"), col("n_endpoints"), col("assortativity"))

@@ -83,9 +83,8 @@ object Scc {
   /** (node, scc) for every node of the directed graph `edges`
     * (`src`, `dst` columns); `scc` is the minimum node id in the
     * component (deterministic, partition-invariant). */
-  def components(edges: DataFrame, maxLevels: Int = 64,
-                 maxPropRounds: Int = 128): DataFrame =
-    componentsAndCleanEdges(edges, maxLevels, maxPropRounds)._1
+  def components(edges: DataFrame): DataFrame =
+    componentsAndCleanEdges(edges)._1
       .orderBy("node")
 
   /** [[components]] minus the public ordering contract, PLUS the
@@ -95,8 +94,7 @@ object Scc {
     * join the UNSORTED labeling instead of paying components()'s output
     * sort (r14; identical labels either way). */
   private[graft] def componentsAndCleanEdges(
-      edges: DataFrame, maxLevels: Int = 64,
-      maxPropRounds: Int = 128): (DataFrame, DataFrame) = {
+      edges: DataFrame): (DataFrame, DataFrame) = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
@@ -120,8 +118,8 @@ object Scc {
     lastLevels = 0
     lastMaxPropRounds = 0
     while (!nodes.isEmpty) {
-      require(level < maxLevels,
-        s"SCC did not converge in $maxLevels FW-BW levels — refusing to " +
+      require(level < 64,
+        s"SCC did not converge in 64 FW-BW levels — refusing to " +
           "return a partial labeling (expected O(log n) with random " +
           "pivots; raise maxLevels if the graph genuinely needs more)")
       // 1. trim: no in-edges or no out-edges within the node's part —
@@ -149,7 +147,7 @@ object Scc {
         val dirEdges = rem.select(col("src"), col("dst"), lit(0).as("dir"))
           .union(rem.select(col("dst").as("src"), col("src").as("dst"),
             lit(1).as("dir")))
-        val lab = minLabel(withPrio, dirEdges, maxPropRounds)
+        val lab = minLabel(withPrio, dirEdges, 128)
         val cat = withPrio.select("node", "part")
           .join(lab.filter(col("dir") === 0)
             .select(col("node"), col("ln").as("f_ln")), "node")
@@ -313,10 +311,10 @@ object Scc {
     * between the stages (the separate-call composition re-distincts
     * the raw edges and re-sorts the labels for joins that need
     * neither). Identical result to the composition. */
-  def condensationLayers(edges: DataFrame, maxLayers: Int = 64): DataFrame = {
+  def condensationLayers(edges: DataFrame): DataFrame = {
     val (labeling, e0) = componentsAndCleanEdges(edges)
     val labels = labeling.localCheckpoint(eager = true)
-    topoLayers(condensationEdgesOfClean(e0, labels), maxLayers)
+    topoLayers(condensationEdgesOfClean(e0, labels))
   }
 
   /** Kahn topological layers of a DAG: layer(v) = length of the longest
@@ -330,7 +328,7 @@ object Scc {
     * quadratic pair state to save rounds. REFUSES loudly on a cycle
     * (nodes remain but no source exists) and past `maxLayers` — run
     * [[condensation]] first for general graphs. */
-  def topoLayers(edges: DataFrame, maxLayers: Int = 64): DataFrame = {
+  def topoLayers(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     var rem = edges.select(col("src").cast("long"), col("dst").cast("long"))
@@ -346,8 +344,8 @@ object Scc {
     val resultParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var layer = 0L
     while (!remaining.isEmpty) {
-      require(layer < maxLayers,
-        s"topoLayers did not finish in $maxLayers layers")
+      require(layer < 64,
+        s"topoLayers did not finish in 64 layers")
       val sources = remaining
         .join(rem.select(col("dst").as("node")).distinct(),
           Seq("node"), "left_anti")

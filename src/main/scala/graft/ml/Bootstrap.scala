@@ -32,11 +32,10 @@ object Bootstrap {
     }
 
   /** Bootstrap CI of the per-group mean of `valCol`: B replicate means
-    * per group, then the (lo, 0.5, hi) percentiles across replicates.
+    * per group, then the (0.025, 0.5, 0.975) percentiles across replicates.
     * Output per group: n_rows, mean, boot_lo, boot_mid, boot_hi. */
   def groupMeanCI(df: DataFrame, groupCol: String, idCol: String,
-                  valCol: String, b: Int = 48, lo: Double = 0.025,
-                  hi: Double = 0.975, digits: Int = 6): DataFrame = {
+                  valCol: String, b: Int = 48): DataFrame = {
     require(b >= 8, s"need at least 8 replicates, got $b")
     val u = (graft.functions.HashExpressions.fnv1a32(
       concat_ws(":", col(idCol).cast("string"), col("_b").cast("string")))
@@ -50,12 +49,12 @@ object Bootstrap {
     val base = df.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_rows"), avg(col(valCol)).as("_mean"))
     base.join(reps.groupBy(col(groupCol)).agg(
-        round(percentile(col("_m"), lit(lo)), digits).as("boot_lo"),
-        round(percentile(col("_m"), lit(0.5)), digits).as("boot_mid"),
-        round(percentile(col("_m"), lit(hi)), digits).as("boot_hi")),
+        round(percentile(col("_m"), lit(0.025)), 6).as("boot_lo"),
+        round(percentile(col("_m"), lit(0.5)), 6).as("boot_mid"),
+        round(percentile(col("_m"), lit(0.975)), 6).as("boot_hi")),
       Seq(groupCol))
       .select(col(groupCol), col("n_rows"),
-        round(col("_mean"), digits).as("mean"),
+        round(col("_mean"), 6).as("mean"),
         col("boot_lo"), col("boot_mid"), col("boot_hi"))
       .orderBy(groupCol)
   }

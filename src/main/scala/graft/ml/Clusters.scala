@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions._
   * reference's driver-side sklearn fit on a sample. */
 object Clusters {
 
+  /** Cluster count of every k-means fit here. */
+  private val K = 4
+
   /** Machine-checkable clustering quality report (single row): pins the
     * feature engineering exactly (point count + feature means survive to
     * a SQL oracle) and asserts two quality invariants an oracle can
@@ -30,7 +33,7 @@ object Clusters {
         log1p(col("value")).as("f_value"),
         hour(col("ts")).cast("double").as("f_hour")): _*)
 
-  def qualityReport(events: DataFrame, k: Int = 4, seed: Long = 42L): DataFrame = {
+  def qualityReport(events: DataFrame): DataFrame = {
     val feats = features(events, Seq.empty)
     val assembled = new VectorAssembler()
       .setInputCols(Array("f_value", "f_hour")).setOutputCol("features")
@@ -38,7 +41,7 @@ object Clusters {
       .transform(feats)
       .persist()
     try {
-      val model = new KMeans().setK(k).setSeed(seed).setMaxIter(8)
+      val model = new KMeans().setK(K).setSeed(42L).setMaxIter(8)
         .setFeaturesCol("features").fit(assembled)
       val sse = model.summary.trainingCost
       val nonEmpty = model.summary.clusterSizes.count(_ > 0)
@@ -59,10 +62,10 @@ object Clusters {
         count(lit(1)).as("n_points"),
         round(avg("f_value"), 6).as("avg_f_value"),
         round(avg("f_hour"), 4).as("avg_f_hour"))
-        .select(lit(k).as("k"), col("n_points"),
+        .select(lit(K).as("k"), col("n_points"),
           col("avg_f_value"), col("avg_f_hour"),
           lit(sse <= naiveSse).as("sse_explains_85pct_variance"),
-          lit(nonEmpty == k).as("clusters_nonempty"))
+          lit(nonEmpty == K).as("clusters_nonempty"))
     } finally { assembled.unpersist(); () }
   }
 
@@ -83,7 +86,7 @@ object Clusters {
     *     be: with maxIter=8 the final reassignment can outrun the last
     *     centroid update and flake the gate). Convergence QUALITY is
     *     ml1's separate SSE-explains-85%-variance bound. */
-  def clusterInvariantProfile(events: DataFrame, k: Int = 4, seed: Long = 42L): DataFrame = {
+  def clusterInvariantProfile(events: DataFrame, seed: Long = 42L): DataFrame = {
     val feats = features(events, Seq.empty)
     val assembled = new VectorAssembler()
       .setInputCols(Array("f_value", "f_hour")).setOutputCol("features")
@@ -98,7 +101,7 @@ object Clusters {
       require(nTotal > 0,
         "clusterInvariantProfile: no rows in the clustering feature " +
           "domain (every value/ts is null or value <= -1)")
-      val model = new KMeans().setK(k).setSeed(seed).setMaxIter(8)
+      val model = new KMeans().setK(K).setSeed(seed).setMaxIter(8)
         .setFeaturesCol("features").fit(assembled)
       val centers = model.clusterCenters.map(v => (v(0), v(1)))
       // canonical rank: ascending centroid norm, index as tie-break
@@ -157,7 +160,7 @@ object Clusters {
 
   /** Cluster events on (log1p(value), hour) and report per-cluster sizes
     * and centroids — deterministic given the fixed seed. */
-  def eventClusters(events: DataFrame, k: Int = 4, seed: Long = 42L): DataFrame = {
+  def eventClusters(events: DataFrame, seed: Long = 42L): DataFrame = {
     val feats = features(events, Seq(col("event_id")))
     // skip, don't crash: one null/NaN row (null value, or value < -1
     // making log1p NaN) must not kill the clustering job
@@ -167,7 +170,7 @@ object Clusters {
       .transform(feats)
     // maxIter 8: the 2-D log-feature space converges in a handful of
     // Lloyd's iterations; the default 20 mostly buys repeated no-op jobs.
-    val model = new KMeans().setK(k).setSeed(seed).setMaxIter(8)
+    val model = new KMeans().setK(K).setSeed(seed).setMaxIter(8)
       .setFeaturesCol("features").fit(assembled)
     model.transform(assembled)
       .groupBy(col("prediction").as("cluster"))

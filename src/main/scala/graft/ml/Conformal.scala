@@ -24,7 +24,7 @@ object Conformal {
     * (n_train, n_calib, n_eval, q_hat, covered, coverage, avg_width).
     *
     * Reproducibility design: the fitted coefficients are snapped to the
-    * `digits` grid BEFORE any scoring. The raw covariance moments carry
+    * 6-decimal grid BEFORE any scoring. The raw covariance moments carry
     * ~1-ulp summation-order drift between engines; left unrounded, that
     * drift propagates into every residual and the calibration quantile,
     * and a single boundary row flips the integer `covered` count.
@@ -34,7 +34,7 @@ object Conformal {
     * comparison is exact, not probabilistic. */
   def intervalReport(train: DataFrame, calib: DataFrame, eval: DataFrame,
                      y: Column, x1: Column, x2: Column,
-                     level: Double = 0.9, digits: Int = 6): DataFrame = {
+                     level: Double = 0.9): DataFrame = {
     require(level > 0 && level < 1, s"level must be in (0,1), got $level")
     def xy(df: DataFrame) = df.select(y.cast("double").as("_y"),
       x1.cast("double").as("_x1"), x2.cast("double").as("_x2"))
@@ -50,18 +50,18 @@ object Conformal {
     val det = col("v1") * col("v2") - col("c12") * col("c12")
     val fit = m.select(col("n_train"),
       round((col("v2") * col("c1y") - col("c12") * col("c2y")) / det,
-        digits).as("b1"),
+        6).as("b1"),
       round((col("v1") * col("c2y") - col("c12") * col("c1y")) / det,
-        digits).as("b2"),
+        6).as("b2"),
       col("my"), col("m1"), col("m2"))
       .select(col("n_train"), col("b1"), col("b2"),
         round(col("my") - col("b1") * col("m1") - col("b2") * col("m2"),
-          digits).as("b0"))
+          6).as("b0"))
     def absRes = round(abs(col("_y")
-      - (col("b0") + col("b1") * col("_x1") + col("b2") * col("_x2"))), digits)
+      - (col("b0") + col("b1") * col("_x1") + col("b2") * col("_x2"))), 6)
     val qhat = xy(calib).crossJoin(broadcast(fit))
       .agg(count(lit(1)).as("n_calib"),
-        round(percentile(absRes, lit(level)), digits).as("q_hat"))
+        round(percentile(absRes, lit(level)), 6).as("q_hat"))
       .select(col("n_calib"), col("q_hat"))
     xy(eval).crossJoin(broadcast(fit)).crossJoin(broadcast(qhat))
       .agg(first(col("n_train")).as("n_train"),
@@ -72,6 +72,6 @@ object Conformal {
       .select(col("n_train"), col("n_calib"), col("n_eval"), col("q_hat"),
         col("covered"),
         round(col("covered").cast("double") / col("n_eval"), 4).as("coverage"),
-        round(lit(2.0) * col("q_hat"), digits).as("avg_width"))
+        round(lit(2.0) * col("q_hat"), 6).as("avg_width"))
   }
 }

@@ -137,15 +137,15 @@ object Eval {
     * EXCLUDING the row itself, `(S_c − y_i) / (n_c − 1)` (null for
     * singleton categories — no self-information leaks). One category
     * aggregate broadcast-joined back; the per-row arithmetic is
-    * row-local. Returns the input plus `outCol`.
+    * row-local. Returns the input plus `loo_enc`.
     */
-  def looTargetEncode(df: DataFrame, catCol: String, targetCol: String,
-                      outCol: String = "loo_enc"): DataFrame = {
+  def looTargetEncode(df: DataFrame, catCol: String,
+                      targetCol: String): DataFrame = {
     val stats = df.groupBy(catCol)
       .agg(sum(col(targetCol).cast("double")).as("_s"),
         count(col(targetCol)).as("_n"))
     df.join(broadcast(stats), Seq(catCol))
-      .withColumn(outCol,
+      .withColumn("loo_enc",
         when(col("_n") > 1,
           (col("_s") - col(targetCol)) / (col("_n") - 1)))
       .drop("_s", "_n")

@@ -17,6 +17,10 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * partition-wise with no shuffle. */
 object IsolationForest {
 
+  /** ψ, the subsample size each tree is grown on, and the sampling seed. */
+  private val SampleSize = 256
+  private val Seed = 42L
+
   sealed trait Node
   final case class Leaf(size: Int) extends Node
   final case class Split(feature: Int, threshold: Double,
@@ -112,40 +116,39 @@ object IsolationForest {
   }
 
   /** Fit on seeded subsamples (one `sample`+`collect` of t·ψ rows). */
-  def fit(df: DataFrame, featureCols: Seq[String], numTrees: Int = 100,
-          sampleSize: Int = 256, seed: Long = 42L): Model = {
-    val total = numTrees.toLong * sampleSize
+  def fit(df: DataFrame, featureCols: Seq[String],
+          numTrees: Int = 100): Model = {
+    val total = numTrees.toLong * SampleSize
     val n = df.count()
     val fraction = math.min(1.0, (total * 1.2).toDouble / math.max(n, 1L))
     val sampled = df
       .select(featureCols.map(c => col(c).cast("double")): _*)
       .na.drop()
-      .sample(withReplacement = n < total, fraction, seed)
+      .sample(withReplacement = n < total, fraction, Seed)
       .collect()
       .map(r => featureCols.indices.map(r.getDouble).toArray)
     require(sampled.nonEmpty, "no rows to fit on")
-    val rnd = new Random(seed)
-    val heightLimit = math.ceil(math.log(sampleSize.toDouble) / math.log(2.0)).toInt
+    val rnd = new Random(Seed)
+    val heightLimit = math.ceil(math.log(SampleSize.toDouble) / math.log(2.0)).toInt
     val trees = (0 until numTrees).map { _ =>
-      val sub = Array.fill(math.min(sampleSize, sampled.length))(
+      val sub = Array.fill(math.min(SampleSize, sampled.length))(
         sampled(rnd.nextInt(sampled.length)))
       buildTree(sub, heightLimit, rnd)
     }
-    Model(trees, sampleSize, featureCols)
+    Model(trees, SampleSize, featureCols)
   }
 
   /** Reference-shaped convenience: fit + flag the `contamination`
     * fraction with the highest scores (`part2.ipynb` cell 23 semantics:
     * IsolationForest(contamination=0.02) labels). */
   def detect(df: DataFrame, featureCols: Seq[String],
-             contamination: Double = 0.02, numTrees: Int = 100,
-             seed: Long = 42L): DataFrame = {
+             contamination: Double = 0.02, numTrees: Int = 100): DataFrame = {
     // persist: approxQuantile is an action over the scored frame, and the
     // caller's first action would otherwise re-run the 100-tree scoring.
     // MEMORY_AND_DISK evicts/spills under pressure; a caller scoring many
     // frames in one long session should unpersist the returned frame's
     // parent when done with it.
-    val scored = fit(df, featureCols, numTrees, seed = seed).transform(df)
+    val scored = fit(df, featureCols, numTrees).transform(df)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val threshold = scored.stat
       .approxQuantile("anomaly_score", Array(1.0 - contamination), 0.001).head

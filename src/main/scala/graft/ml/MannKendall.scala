@@ -21,7 +21,7 @@ object MannKendall {
 
   /** One row per group: n_points, s_stat, var_s, z, tau_b. */
   def testByGroup(series: DataFrame, groupCol: String, xCol: String,
-                  yCol: String, digits: Int = 6): DataFrame = {
+                  yCol: String): DataFrame = {
     val pts = series.select(col(groupCol).as("_g"),
       col(xCol).cast("double").as("_x"), col(yCol).cast("double").as("_y"))
     val l = pts.select(col("_g"), col("_x").as("_xi"), col("_y").as("_yi"))
@@ -57,9 +57,9 @@ object MannKendall {
         / (sqrt(col("n_pairs").cast("double"))
           * sqrt((col("n_pairs") - col("_tied_pairs")).cast("double"))))
       .select(col("_g").as(groupCol), col("n_points"), col("s_stat"),
-        round(col("var_s"), digits).as("var_s"),
-        round(col("z"), digits).as("z"),
-        round(col("tau_b"), digits).as("tau_b"))
+        round(col("var_s"), 6).as("var_s"),
+        round(col("z"), 6).as("z"),
+        round(col("tau_b"), 6).as("tau_b"))
       .orderBy(groupCol)
   }
 }

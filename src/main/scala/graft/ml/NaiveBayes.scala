@@ -29,25 +29,27 @@ import graft.text.TextAnalysis
   * token count — absent (token, class) pairs need no join rows. */
 object NaiveBayes {
 
+  /** Top tokens by corpus count kept as the model's vocabulary. */
+  private val VocabSize = 2000
+
   /** Train + self-classify + confusion matrix in one call: documents'
-    * `labelCol` is the class; output is (actual, predicted, n_docs) —
+    * `lang` is the class; output is (actual, predicted, n_docs) —
     * the evaluation a curation team actually reads. */
-  def confusionMatrix(documents: DataFrame, labelCol: String = "lang",
-                      vocabSize: Int = 2000): DataFrame = {
-    val toks = documents.select(col("doc_id"), col(labelCol).as("cls"),
+  def confusionMatrix(documents: DataFrame): DataFrame = {
+    val toks = documents.select(col("doc_id"), col("lang").as("cls"),
       explode(TextAnalysis.tokens(col("text"))).as("tok"))
 
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("tok")).limit(vocabSize)
+      .orderBy(desc("cnt"), asc("tok")).limit(VocabSize)
       .select("tok")
     val inVocab = toks.join(broadcast(vocab), Seq("tok"), "left_semi")
 
     // per-class totals over IN-VOCAB tokens + doc counts for the prior
     val classTotals = inVocab.groupBy("cls")
       .agg(count(lit(1)).as("class_total"))
-    val priors = documents.groupBy(col(labelCol).as("cls"))
+    val priors = documents.groupBy(col("lang").as("cls"))
       .agg(count(lit(1)).as("n_docs"))
-    val v = lit(vocabSize.toDouble)
+    val v = lit(VocabSize.toDouble)
 
     // model: (tok, cls, loglik); absent (tok, cls) pairs take the OOV
     // floor ln(1/(classTotal+V)) — handled at scoring via the analytic
@@ -82,7 +84,7 @@ object NaiveBayes {
       .agg(max_by(col("cls"), struct(col("score"), col("cls")))
         .as("predicted"))
 
-    documents.select(col("doc_id"), col(labelCol).as("actual"))
+    documents.select(col("doc_id"), col("lang").as("actual"))
       .join(predicted, "doc_id")
       .groupBy("actual", "predicted")
       .agg(count(lit(1)).as("n_docs"))

@@ -13,25 +13,24 @@ object Outliers {
 
   /** Per-group IQR bounds + anomaly counts: value outside
     * [q1 - 1.5·IQR, q3 + 1.5·IQR]. */
-  def iqrAnomalies(events: DataFrame, valueCol: String = "value",
-                   groupCol: String = "event_type"): DataFrame = {
+  def iqrAnomalies(events: DataFrame): DataFrame = {
     val bounds = events
-      .groupBy(groupCol)
+      .groupBy("event_type")
       .agg(
-        expr(s"percentile($valueCol, 0.25)").as("q1"),
-        expr(s"percentile($valueCol, 0.75)").as("q3"))
+        expr("percentile(value, 0.25)").as("q1"),
+        expr("percentile(value, 0.75)").as("q3"))
       .withColumn("lo", col("q1") - (col("q3") - col("q1")) * 1.5)
       .withColumn("hi", col("q3") + (col("q3") - col("q1")) * 1.5)
     events
-      .join(broadcast(bounds), groupCol)
-      .groupBy(groupCol)
+      .join(broadcast(bounds), "event_type")
+      .groupBy("event_type")
       .agg(
         count(lit(1)).as("cnt"),
-        count(when(col(valueCol) < col("lo") || col(valueCol) > col("hi"), 1))
+        count(when(col("value") < col("lo") || col("value") > col("hi"), 1))
           .as("n_anomalies"),
         round(first("lo"), 4).as("lo"),
         round(first("hi"), 4).as("hi"))
-      .orderBy(groupCol)
+      .orderBy("event_type")
   }
 
   /** Per-group MAD (median absolute deviation) robust outlier report —
@@ -48,26 +47,25 @@ object Outliers {
     * An all-identical group (MAD = 0) scores 0 everywhere rather than
     * dividing by zero. */
   def madOutliers(events: DataFrame, valueCol: String = "value",
-                  groupCol: String = "event_type",
                   threshold: Double = 3.5): DataFrame = {
     require(threshold > 0, s"threshold must be positive, got $threshold")
     require(valueCol.matches("[A-Za-z0-9_]+"),
       s"madOutliers valueCol must be a plain identifier, got '$valueCol'")
-    val med = events.groupBy(groupCol)
+    val med = events.groupBy("event_type")
       .agg(expr(s"percentile($valueCol, 0.5)").as("_med"))
-    val dev = events.join(broadcast(med), groupCol)
+    val dev = events.join(broadcast(med), "event_type")
       .withColumn("_ad", abs(col(valueCol) - col("_med")))
-    val mad = dev.groupBy(groupCol)
+    val mad = dev.groupBy("event_type")
       .agg(expr("percentile(_ad, 0.5)").as("_mad"))
-    dev.join(broadcast(mad), groupCol)
+    dev.join(broadcast(mad), "event_type")
       .withColumn("_z", when(col("_mad") === 0d, lit(0d))
         .otherwise(lit(0.6745) * (col(valueCol) - col("_med")) / col("_mad")))
-      .groupBy(groupCol)
+      .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"),
         round(first("_med"), 4).as("med"),
         round(first("_mad"), 4).as("mad"),
         count(when(abs(col("_z")) > threshold, 1)).as("n_flagged"),
         round(max(abs(col("_z"))), 4).as("max_abs_score"))
-      .orderBy(groupCol)
+      .orderBy("event_type")
   }
 }

@@ -24,7 +24,7 @@ object TheilSen {
     * intercept. `series` must be the aggregated (group, x, y) tier with
     * distinct x per group. */
   def slopeByGroup(series: DataFrame, groupCol: String, xCol: String,
-                   yCol: String, digits: Int = 6): DataFrame = {
+                   yCol: String): DataFrame = {
     val pts = series.select(col(groupCol).as("_g"),
       col(xCol).cast("double").as("_x"), col(yCol).cast("double").as("_y"))
     val l = pts.select(col("_g"), col("_x").as("_xi"), col("_y").as("_yi"))
@@ -40,8 +40,8 @@ object TheilSen {
         first(col("_m")).as("_m"),
         percentile(col("_y") - col("_m") * col("_x"), lit(0.5)).as("_b"))
       .select(col("_g").as(groupCol), col("n_points"), col("n_pairs"),
-        round(col("_m"), digits).as("ts_slope"),
-        round(col("_b"), digits).as("ts_intercept"))
+        round(col("_m"), 6).as("ts_slope"),
+        round(col("_b"), 6).as("ts_intercept"))
       .orderBy(groupCol)
   }
 }

@@ -30,12 +30,12 @@ object Thresholds {
     * assignment is exact integer aggregation; only the final ratios are
     * floats. */
   def decileLift(df: DataFrame, score: Column, label: Column,
-                 id: Column, buckets: Int = 10): DataFrame = {
+                 id: Column): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("_s").desc, col("_id").asc)
     val tiled = df.select(score.as("_s"), label.cast("long").as("_y"),
         id.as("_id"))
-      .withColumn("decile", ntile(buckets).over(w))
+      .withColumn("decile", ntile(10).over(w))
       .groupBy("decile")
       .agg(count(lit(1)).as("n"), sum("_y").as("n_pos"))
       // the global ntile window is the operator's dominant cost and has

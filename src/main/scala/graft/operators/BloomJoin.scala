@@ -21,6 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object BloomJoin {
 
+  /** Target false-positive rate of the dimension-key Bloom filter. */
+  private val Fpp = 0.01
+
   /** Inner-join `fact` to `dim` on `factKey = dimKey`, pre-filtering the
     * fact side through a Bloom filter of the dim keys. Keys of ANY type
     * are first folded through `xxhash64` (a null cast would silently
@@ -31,13 +34,13 @@ object BloomJoin {
     * the bit array is tiny, see dedup.Decontaminate). */
   def bloomPrefilteredJoin(fact: DataFrame, dim: DataFrame,
                            factKey: String, dimKey: String,
-                           expectedKeys: Long, fpp: Double = 0.01): DataFrame =
+                           expectedKeys: Long): DataFrame =
     // The broadcast handle rides inside the codegen'd probe expression:
     // bits ship once per executor, and once the returned plan becomes
     // unreachable Spark's ContextCleaner reclaims the broadcast blocks —
     // no per-call accumulation in a long-lived session. Callers needing
     // deterministic release use [[bloomPrefilteredJoinEager]].
-    buildAndJoin(fact, dim, factKey, dimKey, expectedKeys, fpp)._1
+    buildAndJoin(fact, dim, factKey, dimKey, expectedKeys, Fpp)._1
 
   /** The one filter-build-and-join body both entry points share — the
     * sizing floor, null handling, and probe construction must never
@@ -72,8 +75,8 @@ object BloomJoin {
     * matters more than lineage. */
   def bloomPrefilteredJoinEager(fact: DataFrame, dim: DataFrame,
                                 factKey: String, dimKey: String,
-                                expectedKeys: Long, fpp: Double = 0.01): DataFrame =
-    eagerWithHandle(fact, dim, factKey, dimKey, expectedKeys, fpp)._1
+                                expectedKeys: Long): DataFrame =
+    eagerWithHandle(fact, dim, factKey, dimKey, expectedKeys, Fpp)._1
 
   /** Implementation of [[bloomPrefilteredJoinEager]] that also returns
     * the (already-destroyed) broadcast handle, so the spec can assert

@@ -32,17 +32,16 @@ object CdcCompact {
     * (insert < update < delete) then image values, keeping the result
     * total-ordered for any input. */
   def compact(log: DataFrame, keyCol: String, seqCol: String,
-              beforeCol: String = "before", afterCol: String = "after",
-              opCol: String = "op"): DataFrame = {
-    val opRank = when(col(opCol) === "insert", 0)
-      .when(col(opCol) === "update", 1).otherwise(2)
+              beforeCol: String = "before"): DataFrame = {
+    val opRank = when(col("op") === "insert", 0)
+      .when(col("op") === "update", 1).otherwise(2)
     val order = struct(col(seqCol), opRank.as("_r"),
-      col(beforeCol).as("_ob"), col(afterCol).as("_oa"))
+      col(beforeCol).as("_ob"), col("after").as("_oa"))
     val endpoints = log.groupBy(col(keyCol))
       .agg(
-        min_by(struct(col(opCol).as("op"), col(beforeCol).as("b")), order)
+        min_by(struct(col("op"), col(beforeCol).as("b")), order)
           .as("_f"),
-        max_by(struct(col(opCol).as("op"), col(afterCol).as("a")), order)
+        max_by(struct(col("op"), col("after").as("a")), order)
           .as("_l"))
       .select(col(keyCol), col("_f.op").as("_fop"), col("_l.op").as("_lop"),
         col("_f.b").as("_fb"), col("_l.a").as("_la"))

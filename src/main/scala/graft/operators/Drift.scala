@@ -226,10 +226,10 @@ object Drift {
     * aggregation pass over both cohorts together (conditional
     * aggregates split the cohorts; no second scan, no join). The
     * decision column thresholds |t| against the normal-approximation
-    * critical value — exact p-values need the t CDF, a numeric-library
+    * critical value 1.96 — exact p-values need the t CDF, a numeric-library
     * concern, not a data-movement one. */
   def welchTTest(df: DataFrame, groupCol: String, valueCol: String,
-                 cohortCol: Column, critical: Double = 1.96): DataFrame = {
+                 cohortCol: Column): DataFrame = {
     val inA = cohortCol
     val v = col(valueCol)
     val g = df.filter(v.isNotNull)
@@ -250,7 +250,7 @@ object Drift {
         round(col("m_a") - col("m_b"), 4).as("mean_diff"),
         round(t, 4).as("t_stat"),
         round(dfw, 2).as("df_welch"),
-        (abs(t) > critical).as("significant"))
+        (abs(t) > 1.96).as("significant"))
       .orderBy(groupCol)
   }
 }

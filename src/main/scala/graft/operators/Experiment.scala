@@ -36,6 +36,11 @@ import org.apache.spark.sql.functions._
   */
 object Experiment {
 
+  /** The 5% two-sided normal quantile, and the sum z(0.975) + z(0.80)
+    * (1.959964 + 0.841621) that sets [[mde]] at 5% alpha / 80% power. */
+  private val Z975 = 1.959964
+  private val ZSum = 2.801585
+
   /** CUPED-adjusted per-arm means. Per unit (`unitCol`): pre- and
     * post-period metric sums (`valueCol` where `preCol`/its negation),
     * absent periods as 0 — ONE conditional aggregate, no self-join.
@@ -160,13 +165,13 @@ object Experiment {
     * One conditional aggregate yields per-arm trials/successes; the
     * pooled-variance z statistic
     * `z = (p_a − p_b) / sqrt(p̂(1−p̂)(1/n_a + 1/n_b))` is scalar math on
-    * the groups-sized frame. `critical` defaults to the 5% two-sided
+    * the groups-sized frame, significant past `Z975`, the 5% two-sided
     * normal quantile. Degenerate guard: an all-success or all-failure
     * pool (p̂(1−p̂) = 0) yields z = 0 — no division blow-up on either
     * engine.
     */
   def proportionTest(df: DataFrame, groupCol: String, successCol: Column,
-                     armCol: Column, critical: Double = 1.959964): DataFrame = {
+                     armCol: Column): DataFrame = {
     val g = df.groupBy(groupCol)
       .agg(count(when(armCol, 1)).as("n_a"),
         count(when(!armCol, 1)).as("n_b"),
@@ -185,7 +190,7 @@ object Experiment {
     g.select(col(groupCol), col("n_a"), col("n_b"),
         round(pa, 6).as("p_a"), round(pb, 6).as("p_b"),
         round(z, 6).as("z_stat"),
-        (abs(z) > critical).as("significant"))
+        (abs(z) > Z975).as("significant"))
       .orderBy(groupCol)
   }
 
@@ -276,10 +281,10 @@ object Experiment {
     * `Var(R) ≈ (s_xx − 2R·s_xy + R²·s_yy) / (n·ȳ²)` from the unit-level
     * sample (co)variances (Deng et al., KDD 2018 practice). One
     * unit-keyed hash aggregate, one scalar aggregate. Output one row:
-    * n_units, ratio, se, and the ±`zCrit` CI.
+    * n_units, ratio, se, and the ±`Z975` (95%) CI.
     */
   def ratioDeltaMethod(df: DataFrame, unitCol: String, numCol: Column,
-                       denCol: Column, zCrit: Double = 1.959964): DataFrame = {
+                       denCol: Column): DataFrame = {
     val units = df.groupBy(col(unitCol))
       .agg(coalesce(sum(numCol), lit(0.0)).as("x"),
         coalesce(sum(denCol), lit(0.0)).as("y"))
@@ -295,8 +300,8 @@ object Experiment {
         + r * r * col("syy")) / (col("n") * col("my") * col("my"))))
     g.select(col("n").as("n_units"), round(r, 6).as("ratio"),
       round(se, 6).as("se"),
-      round(r - lit(zCrit) * se, 6).as("ci_lo"),
-      round(r + lit(zCrit) * se, 6).as("ci_hi"))
+      round(r - lit(Z975) * se, 6).as("ci_lo"),
+      round(r + lit(Z975) * se, 6).as("ci_hi"))
   }
 
   /** Post-stratified mean: re-weight a (possibly biased) sample's
@@ -326,16 +331,16 @@ object Experiment {
           / sum("n_pop"), 6).as("covered_share"))
   }
 
-  /** Minimum detectable effect per group at two-sided alpha and power
-    * encoded by `zSum` (default 1.959964 + 0.841621 — 5% / 80%): from
+  /** Minimum detectable effect per group at two-sided alpha 5% and power
+    * 80% (`ZSum`): from
     * one conditional aggregate per group, the per-arm counts, the
     * pooled (both-arm) sample variance, and
-    * `mde_abs = zSum · sqrt(v/n_a + v/n_b)`; `mde_rel` divides by the
+    * `mde_abs = ZSum · sqrt(v/n_a + v/n_b)`; `mde_rel` divides by the
     * overall mean. The planning readout: "smaller lifts than this are
     * invisible at this traffic".
     */
   def mde(df: DataFrame, groupCol: String, valueCol: String,
-          armCol: Column, zSum: Double = 2.801585): DataFrame = {
+          armCol: Column): DataFrame = {
     val v = col(valueCol)
     df.filter(v.isNotNull)
       .groupBy(groupCol)
@@ -348,9 +353,9 @@ object Experiment {
       .filter(col("n_a") > 0 && col("n_b") > 0)
       .select(col(groupCol), col("n_a"), col("n_b"),
         round(sqrt(col("v_pooled")), 6).as("sd_pooled"),
-        round(lit(zSum) * sqrt(col("v_pooled") / col("n_a")
+        round(lit(ZSum) * sqrt(col("v_pooled") / col("n_a")
           + col("v_pooled") / col("n_b")), 6).as("mde_abs"),
-        round(lit(zSum) * sqrt(col("v_pooled") / col("n_a")
+        round(lit(ZSum) * sqrt(col("v_pooled") / col("n_a")
           + col("v_pooled") / col("n_b")) / col("m"), 6).as("mde_rel"))
       .orderBy(groupCol)
   }

@@ -33,8 +33,8 @@ object Forecast {
     * Output one row per key: n_obs, final level/trend, one-step-ahead
     * SSE, and the h-step forecasts level + h·trend for h = 1..3. */
   def holt(series: DataFrame, keyCol: String, ordCol: String,
-           valCol: String, alpha: Double = 0.3, beta: Double = 0.1,
-           digits: Int = 6): DataFrame = {
+           valCol: String, alpha: Double = 0.3,
+           beta: Double = 0.1): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
     require(beta > 0 && beta < 1, s"beta must be in (0,1), got $beta")
     val folded = series
@@ -55,12 +55,12 @@ object Forecast {
                                  * (y - (acc.l + acc.b))))"""))
     folded.select(col(keyCol),
       size(col("_ys")).cast("long").as("n_obs"),
-      round(col("_fit.l"), digits).as("level"),
-      round(col("_fit.b"), digits).as("trend"),
-      round(col("_fit.sse"), digits).as("sse"),
-      round(col("_fit.l") + col("_fit.b"), digits).as("fcst_1"),
-      round(col("_fit.l") + lit(2.0) * col("_fit.b"), digits).as("fcst_2"),
-      round(col("_fit.l") + lit(3.0) * col("_fit.b"), digits).as("fcst_3"))
+      round(col("_fit.l"), 6).as("level"),
+      round(col("_fit.b"), 6).as("trend"),
+      round(col("_fit.sse"), 6).as("sse"),
+      round(col("_fit.l") + col("_fit.b"), 6).as("fcst_1"),
+      round(col("_fit.l") + lit(2.0) * col("_fit.b"), 6).as("fcst_2"),
+      round(col("_fit.l") + lit(3.0) * col("_fit.b"), 6).as("fcst_3"))
       .orderBy(keyCol)
   }
 
@@ -75,8 +75,7 @@ object Forecast {
     * per-key series tier only. Output: one row per (key, phase) with
     * n_obs (full-window points at that phase) and seasonal_index. */
   def seasonalDecompose(series: DataFrame, keyCol: String, ordCol: String,
-                        valCol: String, period: Int = 7,
-                        digits: Int = 6): DataFrame = {
+                        valCol: String, period: Int = 7): DataFrame = {
     require(period >= 2 && period % 2 == 1,
       s"period must be odd and >= 3, got $period (even periods need the " +
         "2×MA variant)")
@@ -95,7 +94,7 @@ object Forecast {
     val centers = raw.groupBy(col(keyCol)).agg(avg(col("_s_raw")).as("_c"))
     raw.join(centers, Seq(keyCol))
       .select(col(keyCol), col("_phase").as("phase"), col("n_obs"),
-        round(col("_s_raw") - col("_c"), digits).as("seasonal_index"))
+        round(col("_s_raw") - col("_c"), 6).as("seasonal_index"))
       .orderBy(keyCol, "phase")
   }
 
@@ -107,8 +106,7 @@ object Forecast {
     * lags + one aggregation; positions are row-number order over
     * `ordCol`, so gaps in the calendar count as adjacent. */
   def seasonalNaiveMase(series: DataFrame, keyCol: String, ordCol: String,
-                        valCol: String, season: Int = 7,
-                        digits: Int = 6): DataFrame = {
+                        valCol: String, season: Int = 7): DataFrame = {
     require(season >= 2, s"season must be >= 2, got $season")
     val w = Window.partitionBy(keyCol).orderBy(ordCol)
     series
@@ -120,9 +118,9 @@ object Forecast {
         avg(abs(col("_y") - col("_lag_m"))).as("_mae_m"),
         avg(abs(col("_y") - col("_lag_1"))).as("_mae_1"))
       .select(col(keyCol), col("n_scored"),
-        round(col("_mae_m"), digits).as("mae_seasonal"),
-        round(col("_mae_1"), digits).as("mae_naive1"),
-        round(col("_mae_m") / col("_mae_1"), digits).as("mase"))
+        round(col("_mae_m"), 6).as("mae_seasonal"),
+        round(col("_mae_1"), 6).as("mae_naive1"),
+        round(col("_mae_m") / col("_mae_1"), 6).as("mase"))
       .orderBy(keyCol)
   }
 
@@ -169,11 +167,11 @@ object Forecast {
     * monthly tier is calendar-bounded; both prior-period joins run on
     * it alone. Totals are rounded before the ratios so the growth
     * figures are reproducible across engines. */
-  def periodOverPeriod(df: DataFrame, dateCol: String, valCol: String,
-                       digits: Int = 4): DataFrame = {
+  def periodOverPeriod(df: DataFrame, dateCol: String,
+                       valCol: String): DataFrame = {
     val monthly = df
       .groupBy(date_format(col(dateCol), "yyyy-MM").as("month"))
-      .agg(round(sum(valCol), digits).as("revenue"))
+      .agg(round(sum(valCol), 4).as("revenue"))
     def shifted(months: Int, out: String) = monthly.select(
       date_format(add_months(to_date(concat(col("month"), lit("-01"))),
         months), "yyyy-MM").as("month"),
@@ -182,8 +180,8 @@ object Forecast {
       .join(shifted(1, "_pm"), Seq("month"), "left")
       .join(shifted(12, "_py"), Seq("month"), "left")
       .select(col("month"), col("revenue"),
-        round((col("revenue") - col("_pm")) / col("_pm"), digits).as("mom_pct"),
-        round((col("revenue") - col("_py")) / col("_py"), digits).as("yoy_pct"))
+        round((col("revenue") - col("_pm")) / col("_pm"), 4).as("mom_pct"),
+        round((col("revenue") - col("_py")) / col("_py"), 4).as("yoy_pct"))
       .orderBy("month")
   }
 }

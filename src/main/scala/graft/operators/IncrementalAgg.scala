@@ -31,13 +31,11 @@ object IncrementalAgg {
     * null for deletes). Keys whose maintained count reaches zero are
     * dropped, so the result is exactly `viewOf(newBase)` for any batch
     * whose images are consistent with the base. */
-  def applyCdc(view: DataFrame, cdc: DataFrame, keyCol: String,
-               beforeCol: String = "before", afterCol: String = "after",
-               opCol: String = "op"): DataFrame = {
-    val dn = when(col(opCol) === "insert", 1L)
-      .when(col(opCol) === "delete", -1L).otherwise(0L)
-    val dt = coalesce(when(col(opCol) =!= "delete", col(afterCol)), lit(0.0)) -
-      coalesce(when(col(opCol) =!= "insert", col(beforeCol)), lit(0.0))
+  def applyCdc(view: DataFrame, cdc: DataFrame, keyCol: String): DataFrame = {
+    val dn = when(col("op") === "insert", 1L)
+      .when(col("op") === "delete", -1L).otherwise(0L)
+    val dt = coalesce(when(col("op") =!= "delete", col("after")), lit(0.0)) -
+      coalesce(when(col("op") =!= "insert", col("before")), lit(0.0))
     val delta = cdc.groupBy(col(keyCol))
       .agg(sum(dn).as("_dn"), sum(dt).as("_dt"))
     view.join(delta, Seq(keyCol), "full_outer")

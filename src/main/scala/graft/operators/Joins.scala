@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   * `part2.ipynb` cell 13:335, collects — ours stays distributed). */
 object Joins {
 
+  /** Relative standard deviation of the HLL sketches in
+    * [[joinCardinalityEstimate]]. */
+  private val Rsd = 0.02
+
   /** J1: fact ⋈ dimension equi-join + aggregate (`part2.ipynb` cell 29's
     * daily-weather join shape). Customer is small → broadcast. */
   def ordersBySegment(orders: DataFrame, customer: DataFrame): DataFrame =
@@ -64,15 +68,14 @@ object Joins {
     * figures before trusting a plan to them (the j8 gate does exactly
     * that mechanically). */
   def joinCardinalityEstimate(left: DataFrame, leftKey: String,
-                              right: DataFrame, rightKey: String,
-                              rsd: Double = 0.02): DataFrame = {
+                              right: DataFrame, rightKey: String): DataFrame = {
     val a = left.select(col(leftKey).as("k")).filter(col("k").isNotNull)
     val b = right.select(col(rightKey).as("k")).filter(col("k").isNotNull)
     val sa = a.agg(count(lit(1)).as("n_left"),
-      approx_count_distinct(col("k"), rsd).as("d_left"))
+      approx_count_distinct(col("k"), Rsd).as("d_left"))
     val sb = b.agg(count(lit(1)).as("n_right"),
-      approx_count_distinct(col("k"), rsd).as("d_right"))
-    val su = a.union(b).agg(approx_count_distinct(col("k"), rsd).as("d_union"))
+      approx_count_distinct(col("k"), Rsd).as("d_right"))
+    val su = a.union(b).agg(approx_count_distinct(col("k"), Rsd).as("d_union"))
     sa.crossJoin(sb).crossJoin(su)
       .withColumn("d_overlap",
         greatest(col("d_left") + col("d_right") - col("d_union"), lit(0L)))
@@ -107,10 +110,9 @@ object Joins {
     * (`part2.ipynb` cell 29 analog) generalized to the star schema. */
   def revenueByNation(lineitem: DataFrame, orders: DataFrame,
                       customer: DataFrame, nation: DataFrame,
-                      region: DataFrame,
-                      yearFrom: Int = 1996, yearTo: Int = 1997): DataFrame =
+                      region: DataFrame): DataFrame =
     lineitem
-      .join(orders.filter(year(col("o_orderdate")).between(yearFrom, yearTo)),
+      .join(orders.filter(year(col("o_orderdate")).between(1996, 1997)),
         lineitem("l_orderkey") === orders("o_orderkey"))
       .join(customer, orders("o_custkey") === customer("c_custkey"))
       .join(broadcast(nation), customer("c_nationkey") === nation("n_nationkey"))

@@ -61,7 +61,7 @@ object MarketBasket {
     * before ranking and ties break on the neighbor id, so the cut is
     * engine-independent. All integers until the one division. */
   def itemItemTopK(df: DataFrame, basketCol: String, itemCol: String,
-                   k: Int = 3, digits: Int = 6): DataFrame = {
+                   k: Int = 3): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val baskets = df.select(col(basketCol).as("bk"), col(itemCol).as("item"))
       .distinct()
@@ -77,7 +77,7 @@ object MarketBasket {
       .join(broadcast(marg.select(col("item").as("other"),
         col("n_item").as("n_y"))), "other")
       .withColumn("cosine",
-        round(col("n_both") / sqrt(col("n_x") * col("n_y")), digits))
+        round(col("n_both") / sqrt(col("n_x") * col("n_y")), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("item", "rank", "other", "n_both", "cosine")

@@ -51,11 +51,11 @@ object Privacy {
     * from the group (the per-group noise seed). One grouped count +
     * row-local arithmetic — nothing beyond the count shuffles. */
   def laplaceNoisedCounts(df: DataFrame, groupCol: String, keyExpr: Column,
-                          eps: Double, seed: Long = 1L): DataFrame = {
+                          eps: Double): DataFrame = {
     require(eps > 0, s"epsilon must be positive, got $eps")
     val m = 2147483647L // 2^31 - 1 (Lehmer modulus)
     // u in (0,1) strictly: x in [0, m-1] → (x+1)/(m+1) in (0,1)
-    val u = ((pmod(keyExpr * lit(48271L) + lit(seed), lit(m)) + 1)
+    val u = ((pmod(keyExpr * lit(48271L) + lit(1L), lit(m)) + 1)
       .cast("double")) / lit(2147483648.0)
     val c = u - lit(0.5)
     val noise = lit(-1.0 / eps) * signum(c) * log(lit(1.0) - lit(2.0) * abs(c))

@@ -681,14 +681,13 @@ object Relational {
   def groupedRidge2(df: DataFrame, groupCol: String,
                     x1: org.apache.spark.sql.Column,
                     x2: org.apache.spark.sql.Column,
-                    y: org.apache.spark.sql.Column,
-                    ridge: Double = 1e-6): DataFrame = {
+                    y: org.apache.spark.sql.Column): DataFrame = {
     val g = df.select(col(groupCol), x1.as("_x1"), x2.as("_x2"), y.as("_y"))
       .filter(col("_x1").isNotNull && col("_x2").isNotNull && col("_y").isNotNull)
       .groupBy(groupCol)
       .agg(count(lit(1)).as("n"),
-        (var_pop(col("_x1")) + ridge).as("s11"),
-        (var_pop(col("_x2")) + ridge).as("s22"),
+        (var_pop(col("_x1")) + 1e-6).as("s11"),
+        (var_pop(col("_x2")) + 1e-6).as("s22"),
         covar_pop(col("_x1"), col("_x2")).as("s12"),
         covar_pop(col("_x1"), col("_y")).as("c1y"),
         covar_pop(col("_x2"), col("_y")).as("c2y"),
@@ -836,7 +835,7 @@ object Relational {
     * rank, no gaps) — the semantics "top 3 price points" actually
     * means, vs row_number's arbitrary tie-breaking. Values are bucketed
     * first so ties are real; output is (group, rank, value, n_at_value). */
-  def topValueBucketsWithTies(orders: DataFrame, topRanks: Int = 3): DataFrame = {
+  def topValueBucketsWithTies(orders: DataFrame): DataFrame = {
     val bucketed = orders
       .groupBy(col("o_orderpriority"),
         (floor(col("o_totalprice") / 1000) * 1000).cast("long").as("price_bucket"))
@@ -844,7 +843,7 @@ object Relational {
     val w = Window.partitionBy("o_orderpriority").orderBy(desc("price_bucket"))
     bucketed
       .withColumn("rank", dense_rank().over(w))
-      .filter(col("rank") <= topRanks)
+      .filter(col("rank") <= 3)
       .select("o_orderpriority", "rank", "price_bucket", "n_orders")
       .orderBy("o_orderpriority", "rank")
   }
@@ -862,7 +861,7 @@ object Relational {
     * For billion-key groups the two-pass range-partitioned rank
     * (pipeline.Packing) replaces the window, as in w21. */
   def giniByGroup(df: DataFrame, groupCol: String, keyCol: String,
-                  valCol: String, digits: Int = 6): DataFrame = {
+                  valCol: String): DataFrame = {
     val totals = df.groupBy(col(groupCol), col(keyCol))
       .agg(sum(valCol).as("x"))
     val w = Window.partitionBy(groupCol).orderBy(col("x"), col(keyCol))
@@ -873,7 +872,7 @@ object Relational {
         round(lit(2.0) * sum(col("i") * col("x")) /
             (count(lit(1)) * sum(col("x"))) -
           (count(lit(1)) + lit(1L)).cast("double") / count(lit(1)),
-          digits).as("gini"))
+          6).as("gini"))
       .orderBy(groupCol)
   }
 
@@ -887,7 +886,7 @@ object Relational {
     * aggregate. Rank arithmetic is exact over integers, so only the
     * final corr rounding touches floats. */
   def spearmanByGroup(df: DataFrame, groupCol: String, xCol: String,
-                      yCol: String, digits: Int = 6): DataFrame = {
+                      yCol: String): DataFrame = {
     def avgRank(c: String) =
       rank().over(Window.partitionBy(groupCol).orderBy(c))
         .cast("double") +
@@ -904,7 +903,7 @@ object Relational {
       .withColumn("_ry", avgRank(yCol))
       .groupBy(groupCol)
       .agg(count(lit(1)).as("n"),
-        when(vx > 0 && vy > 0, round(cov / sqrt(vx * vy), digits))
+        when(vx > 0 && vy > 0, round(cov / sqrt(vx * vy), 6))
           .as("spearman"))
       .orderBy(groupCol)
   }
@@ -920,8 +919,8 @@ object Relational {
     * m₂ = E[x²]−μ², m₃ = E[x³]−3μE[x²]+2μ³,
     * m₄ = E[x⁴]−4μE[x³]+6μ²E[x²]−3μ⁴;
     * skew = m₃/m₂^1.5, excess kurtosis = m₄/m₂²−3. */
-  def higherMoments(df: DataFrame, groupCol: String, valCol: String,
-                    digits: Int = 6): DataFrame = {
+  def higherMoments(df: DataFrame, groupCol: String,
+                    valCol: String): DataFrame = {
     val x = col(valCol).cast("double")
     val raw = df.groupBy(groupCol).agg(
       count(lit(1)).as("n"),
@@ -934,10 +933,10 @@ object Relational {
       lit(6.0) * col("m") * col("m") * col("e2") -
       lit(3.0) * col("m") * col("m") * col("m") * col("m")
     raw.select(col(groupCol), col("n"),
-        round(col("m"), digits).as("mean"),
-        round(m2, digits).as("m2"),
-        round(m3 / pow(m2, 1.5), digits).as("skewness"),
-        round(m4 / (m2 * m2) - lit(3.0), digits).as("kurtosis_excess"))
+        round(col("m"), 6).as("mean"),
+        round(m2, 6).as("m2"),
+        round(m3 / pow(m2, 1.5), 6).as("skewness"),
+        round(m4 / (m2 * m2) - lit(3.0), 6).as("kurtosis_excess"))
       .orderBy(groupCol)
   }
 }

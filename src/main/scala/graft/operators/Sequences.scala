@@ -26,8 +26,7 @@ object Sequences {
     * ordered_share = n_ordered/n_both, and support = n_ordered/total
     * sequences. */
   def orderedPairSupport(events: DataFrame, userCol: String,
-                         tsCol: String, itemCol: String,
-                         digits: Int = 6): DataFrame = {
+                         tsCol: String, itemCol: String): DataFrame = {
     val firsts = events
       .filter(col(userCol).isNotNull && col(tsCol).isNotNull
         && col(itemCol).isNotNull)
@@ -45,9 +44,9 @@ object Sequences {
       .filter(col("n_ordered") > 0)
       .crossJoin(broadcast(total))
       .select(col("ant"), col("cons"), col("n_ordered"), col("n_both"),
-        round(col("n_ordered") / col("n_both").cast("double"), digits)
+        round(col("n_ordered") / col("n_both").cast("double"), 6)
           .as("ordered_share"),
-        round(col("n_ordered") / col("_n_seq"), digits).as("support"))
+        round(col("n_ordered") / col("_n_seq"), 6).as("support"))
       .orderBy("ant", "cons")
   }
 }

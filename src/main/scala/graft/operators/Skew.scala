@@ -15,26 +15,27 @@ object Skew {
   /** Two-phase salted aggregation: groupBy (key, salt) partially, then
     * re-aggregate by key. Identical result to a direct
     * `groupBy(key).agg(count, sum)` — but a key holding 30% of a 100 TB
-    * table fans out over `salts` reducers in phase one instead of
+    * table fans out over 32 salts in phase one instead of
     * funneling into a single task. */
-  def saltedCountSum(df: DataFrame, key: String, valueCol: String,
-                     salts: Int = 32): DataFrame =
-    df.withColumn("_salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
+  def saltedCountSum(df: DataFrame, key: String,
+                     valueCol: String): DataFrame =
+    df.withColumn("_salt",
+        pmod(spark_partition_id() + monotonically_increasing_id(), lit(32)))
       .groupBy(col(key), col("_salt"))
       .agg(count(lit(1)).as("_cnt"), sum(valueCol).as("_sum"))
       .groupBy(col(key))
       .agg(sum("_cnt").as("cnt"), sum("_sum").as("total"))
 
   /** Salted join of a skewed fact against a dimension too large to
-    * broadcast whole: the fact side gets a random salt in [0, salts),
-    * the dim side is replicated `salts` times, and the join key becomes
-    * (key, salt) — hot keys spread over `salts` tasks. */
-  def saltedJoin(skewedFact: DataFrame, dim: DataFrame, key: String,
-                 salts: Int = 8): DataFrame = {
+    * broadcast whole: the fact side gets a random salt in [0, 8), the
+    * dim side is replicated 8 times, and the join key becomes
+    * (key, salt) — hot keys spread over 8 tasks. */
+  def saltedJoin(skewedFact: DataFrame, dim: DataFrame,
+                 key: String): DataFrame = {
     val saltedFact = skewedFact.withColumn("_salt",
-      pmod(hash(monotonically_increasing_id()), lit(salts)))
+      pmod(hash(monotonically_increasing_id()), lit(8)))
     val replicatedDim = dim.withColumn("_salt",
-      explode(array((0 until salts).map(lit): _*)))
+      explode(array((0 until 8).map(lit): _*)))
     saltedFact.join(replicatedDim, Seq(key, "_salt")).drop("_salt")
   }
 }

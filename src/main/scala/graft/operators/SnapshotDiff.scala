@@ -146,11 +146,11 @@ object SnapshotDiff {
     * counts exactly). */
   def incrementalAggUpdate(oldAgg: DataFrame, oldSnap: DataFrame,
                            changes: DataFrame, key: String, dimCol: String,
-                           valueCol: String, opCol: String = "op"): DataFrame = {
+                           valueCol: String): DataFrame = {
     val touched = changes.select(col(key)).distinct()
     val retract = oldSnap.join(touched, Seq(key), "left_semi")
       .select(col(dimCol), lit(-1L).as("cnt"), (-col(valueCol)).as("val_sum"))
-    val add = changes.filter(col(opCol) === "upsert")
+    val add = changes.filter(col("op") === "upsert")
       .select(col(dimCol), lit(1L).as("cnt"), col(valueCol).as("val_sum"))
     oldAgg.select(col(dimCol), col("cnt"), col("val_sum"))
       .unionByName(retract).unionByName(add)
@@ -159,16 +159,16 @@ object SnapshotDiff {
       .filter(col("cnt") > 0)
   }
 
-  def applyChangeset(base: DataFrame, changes: DataFrame, key: String,
-                     opCol: String = "op"): DataFrame = {
-    val checked = changes.withColumn(opCol,
-      when(col(opCol).isin("upsert", "delete"), col(opCol))
+  def applyChangeset(base: DataFrame, changes: DataFrame,
+                     key: String): DataFrame = {
+    val checked = changes.withColumn("op",
+      when(col("op").isin("upsert", "delete"), col("op"))
         .otherwise(raise_error(concat(
-          lit(s"applyChangeset: unknown op in '$opCol': "), col(opCol)))))
+          lit("applyChangeset: unknown op in 'op': "), col("op")))))
     val untouched = base.join(
       checked.select(col(key).as("_ck")), col(key) <=> col("_ck"), "left_anti")
     untouched.unionByName(
-      checked.filter(col(opCol) === "upsert").drop(opCol)
+      checked.filter(col("op") === "upsert").drop("op")
         .select(base.columns.map(col): _*))
   }
 }

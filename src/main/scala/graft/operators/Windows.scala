@@ -24,12 +24,12 @@ object Windows {
 
   /** W1: top-N per group via row_number (the idiomatic replacement for the
     * reference's per-group sort+head). */
-  def topOrdersPerCustomer(orders: DataFrame, n: Int = 3): DataFrame = {
+  def topOrdersPerCustomer(orders: DataFrame): DataFrame = {
     val w = Window.partitionBy("o_custkey")
       .orderBy(desc("o_totalprice"), asc("o_orderkey"))
     orders
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= n)
+      .filter(col("rn") <= 3)
       .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
       .orderBy("o_custkey", "rn")
   }
@@ -59,7 +59,7 @@ object Windows {
 
   /** Event-time RANGE-frame rolling stats: at every event, the count and
     * value sum of the same user's events in the trailing
-    * `windowSeconds` — the sliding-lookback feature ("requests in the
+    * hour — the sliding-lookback feature ("requests in the
     * last hour") that a ROWS frame ([[rollingDailyAvg]]) cannot express
     * when events are irregularly spaced. `rangeBetween` on the epoch
     * keys the frame by VALUE distance, so ties (equal timestamps) are
@@ -67,12 +67,9 @@ object Windows {
     * data. Partitioned by user — parallel across the key space, no
     * global window; per-task state is one frame's worth of rows,
     * bounded by the densest single user-hour, not the partition. */
-  def trailingWindowStats(events: DataFrame,
-                          windowSeconds: Long = 3600L): DataFrame = {
-    require(windowSeconds > 0,
-      s"windowSeconds must be positive, got $windowSeconds")
+  def trailingWindowStats(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("_ep"))
-      .rangeBetween(-windowSeconds * 1000L, 0L)
+      .rangeBetween(-3600L * 1000L, 0L)
     events
       .withColumn("_ep", epochMs(col("ts")))
       .select(col("event_id"), col("user_id"),
@@ -205,12 +202,10 @@ object Windows {
     * later purchased, and the mean minutes to convert. Two narrow
     * aggregations + one key-partitioned join — each stage shuffles on
     * user_id only, so the shape holds at any event volume. */
-  def conversionFunnel(events: DataFrame,
-                       fromType: String = "click",
-                       toType: String = "purchase"): DataFrame = {
-    val first = events.filter(col("event_type") === fromType)
+  def conversionFunnel(events: DataFrame): DataFrame = {
+    val first = events.filter(col("event_type") === "click")
       .groupBy("user_id").agg(min("ts").as("first_from"))
-    val converted = events.filter(col("event_type") === toType)
+    val converted = events.filter(col("event_type") === "purchase")
       .join(first, "user_id")
       .filter(col("ts") >= col("first_from"))
       .groupBy("user_id").agg(min("ts").as("first_to"))
@@ -494,15 +489,15 @@ object Windows {
     * numbers come from one aggregation. Per-key parallel throughout;
     * order must be unique for reproducible sums. */
   def maxDrawdown(df: DataFrame, keyCol: String, orderCols: Seq[String],
-                  valCol: String, digits: Int = 4): DataFrame = {
+                  valCol: String): DataFrame = {
     val w = Window.partitionBy(keyCol).orderBy(orderCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, 0)
     df.withColumn("_cum", sum(valCol).over(w))
       .withColumn("_peak", max("_cum").over(w))
       .groupBy(keyCol)
       .agg(count(lit(1)).as("n"),
-        round(max(col("_peak") - col("_cum")), digits).as("max_drawdown"),
-        round(sum(valCol), digits).as("final_sum"))
+        round(max(col("_peak") - col("_cum")), 4).as("max_drawdown"),
+        round(sum(valCol), 4).as("final_sum"))
       .orderBy(keyCol)
   }
 

@@ -109,15 +109,15 @@ object Packing {
   }
 
   /** Doc-level packing map for chunked sequences of `seqLen` tokens over
-    * the corpus token stream in ascending `orderCol` order: which
+    * the corpus token stream in ascending `doc_id` order: which
     * sequence each document starts in (`seq_first`), ends in
     * (`seq_last`), and how many sequences it spans. Zero-token documents
     * are pinned to the sequence at their stream position. */
   def packSequences(docs: DataFrame, seqLen: Int,
-                    tokenCount: Column, orderCol: String = "doc_id"): DataFrame = {
+                    tokenCount: Column): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
     val withN = docs.withColumn("n_tokens", tokenCount.cast("long"))
-    withGlobalCumsumBefore(withN, col("n_tokens"), orderCol)
+    withGlobalCumsumBefore(withN, col("n_tokens"), "doc_id")
       .withColumn("seq_first", floor(col("cum_before") / seqLen))
       .withColumn("seq_last",
         floor((col("cum_before") + greatest(col("n_tokens"), lit(1L)) - 1) / seqLen))
@@ -131,21 +131,20 @@ object Packing {
     * (`sequence` → `posexplode` → `substring` — codegen'd builtins, no
     * UDF, no shuffle): chunking 100 TB is a pure map stage that
     * parallelizes per input split. Empty/null texts yield no chunks. */
-  def chunkDocuments(docs: DataFrame, chunkChars: Int, overlap: Int = 0,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
+  def chunkDocuments(docs: DataFrame, chunkChars: Int,
+                     overlap: Int = 0): DataFrame = {
     require(chunkChars > 0 && overlap >= 0 && overlap < chunkChars,
       s"need 0 <= overlap < chunkChars, got chunk=$chunkChars overlap=$overlap")
     val stride = chunkChars - overlap
     val nChunks = // ceil((len - overlap) / stride), min 1 for non-empty text
-      greatest(ceil((length(col(textCol)) - overlap) / lit(stride.toDouble)), lit(1L))
+      greatest(ceil((length(col("text")) - overlap) / lit(stride.toDouble)), lit(1L))
         .cast("long")
     docs
-      .filter(col(textCol).isNotNull && length(col(textCol)) > 0)
-      .select(col(idCol), col(textCol),
+      .filter(col("text").isNotNull && length(col("text")) > 0)
+      .select(col("doc_id"), col("text"),
         posexplode(sequence(lit(0L), nChunks - 1)).as(Seq("chunk_id", "_i")))
-      .select(col(idCol), col("chunk_id").cast("long").as("chunk_id"),
-        substring_index_safe(col(textCol), col("_i") * stride, chunkChars)
+      .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
+        substring_index_safe(col("text"), col("_i") * stride, chunkChars)
           .as("chunk"))
   }
 
@@ -171,13 +170,13 @@ object Packing {
     * their token mass — the audit a packing job publishes so truncation/
     * straddle rates are visible before training. */
   def sequenceProfile(docs: DataFrame, seqLen: Int,
-                      tokenCount: Column, orderCol: String = "doc_id"): DataFrame =
-    packSequences(docs, seqLen, tokenCount, orderCol)
+                      tokenCount: Column): DataFrame =
+    packSequences(docs, seqLen, tokenCount)
       .groupBy(col("seq_first").as("seq_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum("n_tokens").as("seq_tokens"),
-        min(orderCol).as("id_min"),
-        max(orderCol).as("id_max"),
+        min("doc_id").as("id_min"),
+        max("doc_id").as("id_max"),
         sum(when(col("n_seqs_spanned") > 1, 1L).otherwise(0L)).as("n_straddlers"))
       .orderBy("seq_id")
 }

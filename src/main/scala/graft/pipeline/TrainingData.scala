@@ -56,11 +56,10 @@ object TrainingData {
   /** Weighted mixture construction: sample each source at its own rate
     * (e.g. "keep 100% of books, 30% of web") in ONE pass via seeded
     * per-stratum Bernoulli sampling (`sampleBy`) — no per-source jobs,
-    * no shuffle; the sample decision is row-local. Deterministic for a
-    * fixed seed, so mixtures are reproducible across re-runs. */
-  def mixture(documents: DataFrame, weights: Map[String, Double],
-              seed: Long = 42L): DataFrame =
-    documents.stat.sampleBy("source", weights, seed)
+    * no shuffle; the sample decision is row-local. The seed is fixed
+    * (42), so mixtures are reproducible across re-runs. */
+  def mixture(documents: DataFrame, weights: Map[String, Double]): DataFrame =
+    documents.stat.sampleBy("source", weights, 42L)
 
   /** Deterministic EXACT-quota mixture: per source, keep the
     * `quotas(source)` documents with the smallest
@@ -103,12 +102,12 @@ object TrainingData {
     * split by hash chance. When per-stratum exactness matters, draw the
     * held-out sets with [[mixtureByQuota]] (exact per-source counts)
     * and keep the remainder as train. */
-  def splitByHash(documents: DataFrame, trainPct: Int = 90, valPct: Int = 5,
-                  idCol: String = "doc_id"): DataFrame = {
+  def splitByHash(documents: DataFrame, trainPct: Int = 90,
+                  valPct: Int = 5): DataFrame = {
     require(trainPct >= 0 && valPct >= 0 && trainPct + valPct <= 100,
       s"invalid split percentages: train=$trainPct val=$valPct")
     val band = graft.functions.HashExpressions
-      .fnv1a32(col(idCol).cast("string")) % 100
+      .fnv1a32(col("doc_id").cast("string")) % 100
     documents.withColumn("split",
       when(band < trainPct, "train")
         .when(band < trainPct + valPct, "val")
@@ -119,26 +118,22 @@ object TrainingData {
     * duplicate-GROUP representative instead of its own id, so every
     * member of a duplicate cluster lands in the same split — near-copies
     * of a training document can never contaminate val/test (the split
-    * analogue of dedup-before-split). `groupKey` defines the cluster
-    * (default: whitespace-normalized text, the [[graft.dedup.Dedup]]
-    * exact-dup convention); the representative is the cluster's minimum
+    * analogue of dedup-before-split). The cluster key is the
+    * whitespace-normalized text (the [[graft.dedup.Dedup]] exact-dup
+    * convention); the representative is the cluster's minimum
     * id, so group membership — not row order — decides the split.
     *
     * Scale shape: one groupBy on the (hashable) group key to elect
     * representatives plus one join back on the same key — identical
     * shuffle shape to exact dedup itself, then the band decision is
-    * row-local. For corpora where the group key is long text, pass a
-    * digest column (e.g. `md5(norm)`) to move 16-byte keys through both
-    * exchanges instead of payloads. */
-  def splitByGroup(documents: DataFrame, trainPct: Int = 90, valPct: Int = 5,
-                   groupKey: Option[Column] = None,
-                   idCol: String = "doc_id"): DataFrame = {
+    * row-local. */
+  def splitByGroup(documents: DataFrame, trainPct: Int = 90,
+                   valPct: Int = 5): DataFrame = {
     require(trainPct >= 0 && valPct >= 0 && trainPct + valPct <= 100,
       s"invalid split percentages: train=$trainPct val=$valPct")
-    val gk = groupKey.getOrElse(
+    val keyed = documents.withColumn("_gk",
       regexp_replace(lower(col("text")), "[ \\t\\n\\f\\r]+", " "))
-    val keyed = documents.withColumn("_gk", gk)
-    val reps = keyed.groupBy("_gk").agg(min(col(idCol)).as("_grp"))
+    val reps = keyed.groupBy("_gk").agg(min(col("doc_id")).as("_grp"))
     val band = graft.functions.HashExpressions
       .fnv1a32(col("_grp").cast("string")) % 100
     keyed.join(reps, "_gk")
@@ -192,13 +187,13 @@ object TrainingData {
     * Scale shape: rates are a domain-cardinality table broadcast into
     * the corpus scan; the keep decision is row-local. One pass. */
   def temperatureMixture(documents: DataFrame, domainCol: String,
-                         targetFraction: Double, alpha: Double = 0.5,
-                         idCol: String = "doc_id"): DataFrame = {
+                         targetFraction: Double,
+                         alpha: Double = 0.5): DataFrame = {
     val rates = temperatureRates(documents, domainCol, targetFraction, alpha)
       .select(col(domainCol), col("keep_band"))
     documents.join(broadcast(rates), domainCol)
       .filter(pmod(graft.functions.HashExpressions
-          .fnv1a32(col(idCol).cast("string")), lit(10000L)) < col("keep_band"))
+          .fnv1a32(col("doc_id").cast("string")), lit(10000L)) < col("keep_band"))
       .select(documents.columns.map(col).toIndexedSeq: _*)
   }
 
@@ -209,11 +204,10 @@ object TrainingData {
     * between shards as the corpus grows. Downstream,
     * `repartition(col("shard")).write.partitionBy("shard")` gives one
     * writer task per shard with no small-file explosion. */
-  def shardBy(documents: DataFrame, nShards: Int,
-              idCol: String = "doc_id"): DataFrame = {
+  def shardBy(documents: DataFrame, nShards: Int): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
     documents.withColumn("shard",
-      pmod(graft.functions.HashExpressions.fnv1a32(col(idCol).cast("string")),
+      pmod(graft.functions.HashExpressions.fnv1a32(col("doc_id").cast("string")),
         lit(nShards.toLong)).cast("int"))
   }
 
@@ -221,12 +215,11 @@ object TrainingData {
     * the check that shard sizes are uniform enough that no single
     * training-reader stalls the epoch. One row-local hash + one
     * partial→final aggregate over `nShards` keys. */
-  def shardProfile(documents: DataFrame, nShards: Int,
-                   idCol: String = "doc_id"): DataFrame =
-    shardBy(documents, nShards, idCol)
+  def shardProfile(documents: DataFrame, nShards: Int): DataFrame =
+    shardBy(documents, nShards)
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
-        sum(col(idCol)).as("id_sum"),
+        sum(col("doc_id")).as("id_sum"),
         sum(length(col("text"))).as("n_chars"))
       .orderBy("shard")
 
@@ -244,14 +237,14 @@ object TrainingData {
     * corpus scale. The stream order is `(fnv1a32(id), id)`: the hash is
     * the shuffle, the id itself breaks hash collisions, so ids of any
     * magnitude stay deterministic. */
-  def tokenBudgetSample(documents: DataFrame, budgetTokens: Long,
-                        idCol: String = "doc_id"): DataFrame = {
+  def tokenBudgetSample(documents: DataFrame,
+                        budgetTokens: Long): DataFrame = {
     val withN = documents
       .withColumn("_ord",
-        graft.functions.HashExpressions.fnv1a32(col(idCol).cast("string")))
+        graft.functions.HashExpressions.fnv1a32(col("doc_id").cast("string")))
       .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")).cast("long"))
     Packing.withGlobalCumsumBefore(withN, col("n_tokens"), "_ord",
-        tiebreakCol = Some(idCol))
+        tiebreakCol = Some("doc_id"))
       .filter(col("cum_before") + col("n_tokens") <= budgetTokens)
       .drop("_ord", "cum_before")
   }
@@ -299,12 +292,12 @@ object TrainingData {
     * quality-proportional corpus thinning (keep the good web, sample
     * the mediocre) without a mutable RNG anywhere. One codegen'd pass,
     * zero shuffle. */
-  def qualityWeightedSample(documents: DataFrame, rate: Double = 1.0,
-                            idCol: String = "doc_id"): DataFrame = {
+  def qualityWeightedSample(documents: DataFrame,
+                            rate: Double = 1.0): DataFrame = {
     require(rate >= 0, s"rate must be non-negative, got $rate")
     val p = least(TextAnalysis.qualityScore(col("text")) * rate, lit(1.0))
     documents.filter(
-      pmod(graft.functions.HashExpressions.fnv1a32(col(idCol).cast("string")),
+      pmod(graft.functions.HashExpressions.fnv1a32(col("doc_id").cast("string")),
         lit(1000000L)).cast("double") < p * 1000000.0)
   }
 
@@ -345,18 +338,18 @@ object TrainingData {
     * A-ES draw WITHIN every `groupCol` stratum in one pass — "the best
     * k docs per source under the quality-weighted law", the per-stratum
     * quota draw a mixture builder runs after [[mixtureQuota]] decides
-    * the quotas. Same deterministic `u^(1/w)` key (same seed semantics,
+    * the quotas. Same deterministic `u^(1/w)` key (seed 42,
     * same reproducibility-under-retry contract); selection swaps the
     * global TakeOrderedAndProject for a `row_number` over a window
     * PARTITIONED by the stratum — state per task is one counter per
     * group, and k rows per group survive the shuffle's map side only.
     * Groups with fewer than k positive-weight rows keep them all. */
   def weightedSamplePerGroup(df: DataFrame, k: Int, weight: Column,
-                             groupCol: String, idCol: String = "doc_id",
-                             seed: Long = 42L): DataFrame = {
+                             groupCol: String,
+                             idCol: String = "doc_id"): DataFrame = {
     require(k > 0, s"weightedSamplePerGroup: k must be positive, got $k")
     val u = (pmod(graft.functions.HashExpressions.fnv1a32(
-        concat(col(idCol).cast("string"), lit(":"), lit(seed.toString))),
+        concat(col(idCol).cast("string"), lit(":"), lit("42"))),
       lit(1000000L)).cast("double") + 0.5) / 1000000.0
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCol).orderBy(col("es_key").desc, col(idCol))
@@ -396,13 +389,13 @@ object TrainingData {
     * One partial→final aggregation per group (two running sums);
     * nothing downstream of the group table. */
   def effectiveSampleSize(df: DataFrame, groupCol: String,
-                          weight: Column, digits: Int = 6): DataFrame = {
+                          weight: Column): DataFrame = {
     val w = weight.cast("double")
     df.groupBy(groupCol)
       .agg(count(lit(1)).as("n"), sum(w).as("_sw"), sum(w * w).as("_sw2"))
       .select(col(groupCol), col("n"),
-        round(col("_sw") * col("_sw") / col("_sw2"), digits).as("ess"),
-        round(col("_sw") * col("_sw") / col("_sw2") / col("n"), digits)
+        round(col("_sw") * col("_sw") / col("_sw2"), 6).as("ess"),
+        round(col("_sw") * col("_sw") / col("_sw2") / col("n"), 6)
           .as("ess_ratio"))
       .orderBy(groupCol)
   }
@@ -410,8 +403,8 @@ object TrainingData {
   /** Per-language yield of the prepared corpus — the acceptance report a
     * data pipeline publishes per snapshot (docs kept, token budget,
     * mean quality). */
-  def summary(documents: DataFrame, minQuality: Double = 0.5): DataFrame =
-    prepare(documents, minQuality)
+  def summary(documents: DataFrame): DataFrame =
+    prepare(documents)
       .groupBy("lang_guess")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_tokens").as("total_tokens"),

@@ -65,10 +65,10 @@ object Covariance {
   /** All d(d+1)/2 upper-triangle entries as rows `(i, j, cov)` with
     * 1-based indices (matching SQL `generate_subscripts`) and
     * population covariance `Σxy/n − μ_i·μ_j`, rounded to `digits`. */
-  def covarianceMatrix(emb: DataFrame, vecCol: String = "embedding",
-                       digits: Int = 6, fanIn: Int = 64): DataFrame = {
+  def covarianceMatrix(emb: DataFrame, digits: Int = 6,
+                       fanIn: Int = 64): DataFrame = {
     val spark = emb.sparkSession
-    val (_, _, c) = momentsOf(emb, vecCol, fanIn)
+    val (_, _, c) = momentsOf(emb, "embedding", fanIn)
     val scale = math.pow(10, digits)
     val rows = for { i <- c.indices; j <- i until c.length }
       yield Row((i + 1).toLong, (j + 1).toLong, math.rint(c(i)(j) * scale) / scale)

@@ -104,10 +104,10 @@ object Pca {
   /** Adds `score_0..score_{k-1}`: the centered projection onto each kept
     * component, as a row-local codegen'd fold (model folded in as array
     * literals — nothing broadcast, nothing shuffled). */
-  def project(emb: DataFrame, model: PcaModel, vecCol: String = "embedding"): DataFrame = {
+  def project(emb: DataFrame, model: PcaModel): DataFrame = {
     val meanArr = array(model.mean.map(lit): _*)
     val centered = zip_with(
-      transform(col(vecCol), _.cast("double")), meanArr, (x, m) => x - m)
+      transform(col("embedding"), _.cast("double")), meanArr, (x, m) => x - m)
     model.components.zipWithIndex.foldLeft(emb.withColumn("_c", centered)) {
       case (df, (comp, i)) =>
         val compArr = array(comp.map(lit): _*)

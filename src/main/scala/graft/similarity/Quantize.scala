@@ -35,12 +35,12 @@ object Quantize {
     * of byte still occupy object slots in exchange buffers — the 4×
     * saving is realized at the SINK (parquet INT8 logical type /
     * byte-packed binary), not in the operator. */
-  def quantizeInt8(embeddings: DataFrame, vecCol: String = "embedding"): DataFrame = {
-    val d = dbl(col(vecCol))
+  def quantizeInt8(embeddings: DataFrame): DataFrame = {
+    val d = dbl(col("embedding"))
     embeddings
       .withColumn("scale", scaleOf(d))
       .withColumn("qvec",
-        transform(dbl(col(vecCol)), x => floor(x / col("scale") + 0.5d)))
+        transform(dbl(col("embedding")), x => floor(x / col("scale") + 0.5d)))
   }
 
   /** Quantization audit: per input row, the worst absolute
@@ -48,12 +48,11 @@ object Quantize {
     * (plus a tiny float slack). Emits exact-integer evidence (`q_sum`,
     * `q_min`, `q_max`) so a gate can pin the quantized values
     * themselves, not just the bound. */
-  def reconstructionAudit(embeddings: DataFrame, vecCol: String = "embedding",
-                          idCol: String = "vec_id"): DataFrame = {
-    val q = quantizeInt8(embeddings, vecCol)
-    val err = zip_with(dbl(col(vecCol)), col("qvec"),
+  def reconstructionAudit(embeddings: DataFrame): DataFrame = {
+    val q = quantizeInt8(embeddings)
+    val err = zip_with(dbl(col("embedding")), col("qvec"),
       (x, qi) => abs(x - qi * col("scale")))
-    q.select(col(idCol),
+    q.select(col("vec_id"),
       aggregate(col("qvec"), lit(0L), (acc, x) => acc + x.cast("long")).as("q_sum"),
       array_min(col("qvec")).cast("long").as("q_min"),
       array_max(col("qvec")).cast("long").as("q_max"),
@@ -79,11 +78,11 @@ object Quantize {
     * executor re-derives the same splitmix64 planes, so the operator is
     * a pure row-local projection — `outDim` codegen'd dot products per
     * row, zero shuffle, reproducible under retry on any engine. */
-  def randomProject(embeddings: DataFrame, dim: Int, outDim: Int,
-                    vecCol: String = "embedding"): DataFrame = {
+  def randomProject(embeddings: DataFrame, dim: Int,
+                    outDim: Int): DataFrame = {
     require(outDim > 0 && outDim <= dim,
       s"need 0 < outDim <= dim, got outDim=$outDim dim=$dim")
-    val d = dbl(col(vecCol))
+    val d = dbl(col("embedding"))
     val comps = projectionMatrix(dim, outDim).zipWithIndex.map { case (row, j) =>
       graft.functions.HashExpressions.dotProduct(d, typedLit(row)).as(s"p$j")
     }

@@ -29,9 +29,9 @@ object SemDedup {
     * Eagerly materialized (the list is the small artifact downstream
     * anti-joins consume) so the KMeans assignments cache can be
     * released before returning. */
-  def removals(embeddings: DataFrame, tau: Double, nlist: Int = 16,
-               seed: Long = 42L): DataFrame = {
-    val idx = Ivf.buildIndex(embeddings, nlist, seed)
+  def removals(embeddings: DataFrame, tau: Double,
+               nlist: Int = 16): DataFrame = {
+    val idx = Ivf.buildIndex(embeddings, nlist, 42L)
     val keep = idx.assignments.select(col("cluster"),
       col("vec_id").as("kept_id"), col("emb").as("emb_a"),
       col("norm").as("norm_a"))
@@ -53,9 +53,9 @@ object SemDedup {
   }
 
   /** The deduplicated corpus: `embeddings` minus [[removals]]. */
-  def dedup(embeddings: DataFrame, tau: Double, nlist: Int = 16,
-            seed: Long = 42L): DataFrame = {
-    val removed = removals(embeddings, tau, nlist, seed)
+  def dedup(embeddings: DataFrame, tau: Double,
+            nlist: Int = 16): DataFrame = {
+    val removed = removals(embeddings, tau, nlist)
       .select(col("removed_id").as("vec_id"))
     embeddings.join(removed, Seq("vec_id"), "left_anti")
   }
@@ -75,10 +75,9 @@ object SemDedup {
     * Pairs found through two shared cells collapse in the final
     * per-removed_id aggregation. */
   def removalsMultiProbe(embeddings: DataFrame, tau: Double,
-                         nlist: Int = 16, nprobe: Int = 2,
-                         seed: Long = 42L): DataFrame = {
+                         nlist: Int = 16, nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val idx = Ivf.buildIndex(embeddings, nlist, seed)
+    val idx = Ivf.buildIndex(embeddings, nlist)
     // per-vector top-nprobe centroids by squared L2
     // (‖v‖² − 2v·c + ‖c‖², ties to the smaller cluster id), computed
     // ROW-LOCALLY over a broadcast one-row centroid array: sort nlist

@@ -185,12 +185,12 @@ object Similarity {
     * task ever holds a group's full vector set, reducer state is one
     * running mean per (group, dim) cell, and the shuffle key space is
     * groups × dims regardless of corpus size. */
-  def labelCentroids(embeddings: DataFrame, groupCol: String = "label"): DataFrame =
+  def labelCentroids(embeddings: DataFrame): DataFrame =
     embeddings
-      .select(col(groupCol), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .groupBy(col(groupCol), col("dim"))
+      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
+      .groupBy(col("label"), col("dim"))
       .agg(round(avg(col("x")), 6).as("c"))
-      .orderBy(groupCol, "dim")
+      .orderBy("label", "dim")
 
   /** Exact all-pairs top-n cosine — the verification twin of the
     * LSH-bucketed [[topCosinePairs]]. O(n²) pairs: correct at any n but
@@ -354,16 +354,16 @@ object Similarity {
   /** Embedding near-dup detection: cosine above threshold, LSH-bucketed;
     * reports the top pairs so the operator has output even on corpora
     * without near-dups. Signature width scales with corpus size so the
-    * expected bucket occupancy stays ~`targetBucket` — with FIXED bits,
+    * expected bucket occupancy stays ~64 — with FIXED bits,
     * candidate pairs grow quadratically with the corpus (measured 21×
     * time at 10× rows before this), with sized bits they grow linearly.
     * The count() is one cheap columnar scan, amortized against the
     * pairwise stage it bounds. */
-  def topCosinePairs(embeddings: DataFrame, dim: Int, n: Int = 20,
-                     targetBucket: Int = 64): DataFrame = {
+  def topCosinePairs(embeddings: DataFrame, dim: Int,
+                     n: Int = 20): DataFrame = {
     val cnt = math.max(1L, embeddings.count())
     val nBits = math.min(24, math.max(4,
-      math.ceil(math.log(cnt.toDouble / targetBucket) / math.log(2)).toInt))
+      math.ceil(math.log(cnt.toDouble / 64) / math.log(2)).toInt))
     val sig = bucketed(embeddings, dim, nBits)
     val a = sig.select(col("bucket"), col("vec_id").as("id_a"),
       col("emb").as("emb_a"), col("norm").as("norm_a"))

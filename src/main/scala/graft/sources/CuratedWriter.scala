@@ -107,9 +107,7 @@ object CuratedWriter {
     * later.
     *
     * The curated tree's schema is taken as the `mergeSchema` union over
-    * the existing footers (a distributed footer-only job — for trees
-    * where even that is too slow, keep a schema manifest beside the data
-    * and pass it via `existingSchema`). Then:
+    * the existing footers (a distributed footer-only job). Then:
     *   - a column whose TYPE changed always fails — no silent widening
     *     can reconcile `int` data with a `string` history;
     *   - added/missing columns fail by default (`widen = false`) with
@@ -120,8 +118,7 @@ object CuratedWriter {
     *     surface them as nulls under a `mergeSchema` read (`io5`/`io6`).
     * First write into an empty/missing path is drift-free by definition. */
   def writePartitionedIncrementalChecked(df: DataFrame, path: String,
-      cols: Seq[String], widen: Boolean = false,
-      existingSchema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+      cols: Seq[String], widen: Boolean = false): Unit = {
     import org.apache.spark.sql.functions.lit
     val spark = df.sparkSession
     val fsPath = new org.apache.hadoop.fs.Path(path)
@@ -140,11 +137,10 @@ object CuratedWriter {
       }
       found
     }
-    val existing = existingSchema.orElse {
+    val existing =
       if (fs.exists(fsPath) && hasDataFile)
         Some(spark.read.option("mergeSchema", "true").parquet(path).schema)
       else None
-    }
     existing.foreach { ex =>
       val drift = schemaDrift(df.schema, ex, ignoreTypesFor = cols.toSet)
       if (drift.typeChanged.nonEmpty) throw new IllegalStateException(
@@ -260,31 +256,10 @@ object CuratedWriter {
     * readable for time travel / rollback until pruned. Returns the new
     * version number. */
   def publishVersion(df: DataFrame, root: String): Int = {
-    import org.apache.hadoop.fs.Path
-    // resolve the root through Hadoop's FileSystem so the listing and
-    // the pointer land on the SAME store as the parquet data —
-    // java.io.File would silently write the pointer to a bogus local
-    // path when root is hdfs:// or s3a://
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
-    fs.mkdirs(rootPath)
-    val existing =
-      if (!fs.exists(rootPath)) Array.empty[Int]
-      else fs.listStatus(rootPath).map(_.getPath.getName)
-        .filter(_.startsWith("v=")).map(_.drop(2).toInt)
-    val next = if (existing.isEmpty) 1 else existing.max + 1
+    val fs = hadoopFs(df.sparkSession, root)
+    val next = nextVersion(fs, root)
     df.write.mode(SaveMode.ErrorIfExists).parquet(s"$root/v=$next")
-    // write-then-rename where rename is atomic (HDFS/local); object
-    // stores without atomic rename overwrite in place — a one-object
-    // PUT, still the smallest possible commit surface
-    val tmp = new Path(rootPath, "_LATEST.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(rootPath, "_LATEST")
-    fs.delete(ptr, false)
-    if (!fs.rename(tmp, ptr))
-      throw new java.io.IOException(s"publishVersion: rename $tmp -> $ptr failed")
+    writePointer(fs, root, "_LATEST", next)
     next
   }
 
@@ -292,15 +267,64 @@ object CuratedWriter {
     * `version` for time travel). */
   def readLatest(spark: SparkSession, root: String,
                  version: Option[Int] = None): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val v = version.getOrElse {
-      val ptr = new Path(root, "_LATEST")
-      val fs = ptr.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(ptr)
-      try new String(in.readAllBytes(), "UTF-8").trim.toInt
-      finally in.close()
-    }
+    val v = version.getOrElse(
+      readPointer(hadoopFs(spark, root), root, "_LATEST"))
     spark.read.parquet(s"$root/v=$v")
+  }
+
+  // The versioned-pointer layout shared by publishVersion and the band
+  // index (`Dedup.saveBandIndex`): snapshots live in `<root>/v=<n>/`,
+  // and a commit is a small pointer file holding an Int. Paths resolve
+  // through Hadoop's FileSystem so the listing and the pointer land on
+  // the SAME store as the parquet data — java.io.File would silently
+  // write the pointer to a bogus local path when root is hdfs:// or
+  // s3a://.
+
+  private[graft] def hadoopFs(spark: SparkSession,
+                              path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The `n` of every `v=<n>` directory directly under `root`. */
+  private[graft] def versions(fs: org.apache.hadoop.fs.FileSystem,
+                              root: String): Seq[Int] =
+    fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("v=")).map(_.drop(2).toInt)
+
+  /** Create `root` if needed and return one past its highest version
+    * (1 for an empty root). Uncommitted orphans count, so a crashed
+    * write's directory is never reused. */
+  private[graft] def nextVersion(fs: org.apache.hadoop.fs.FileSystem,
+                                 root: String): Int = {
+    fs.mkdirs(new org.apache.hadoop.fs.Path(root))
+    versions(fs, root).maxOption.fold(1)(_ + 1)
+  }
+
+  /** Commit `value` under `dir/name`: write `<name>.tmp`, rename over
+    * `<name>` — atomic on HDFS/local; object stores without atomic
+    * rename overwrite in place — a one-object PUT, still the smallest
+    * possible commit surface. */
+  private[graft] def writePointer(fs: org.apache.hadoop.fs.FileSystem,
+                                  dir: String, name: String,
+                                  value: Int): Unit = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(dir)
+    fs.mkdirs(root)
+    val tmp = new Path(root, s"$name.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(value.toString.getBytes("UTF-8")) finally out.close()
+    val ptr = new Path(root, name)
+    fs.delete(ptr, false)
+    if (!fs.rename(tmp, ptr))
+      throw new java.io.IOException(s"pointer flip $tmp -> $ptr failed")
+  }
+
+  /** The committed value the `dir/name` pointer names. */
+  private[graft] def readPointer(fs: org.apache.hadoop.fs.FileSystem,
+                                 dir: String, name: String): Int = {
+    val in = fs.open(new org.apache.hadoop.fs.Path(dir, name))
+    try new String(in.readAllBytes(), "UTF-8").trim.toInt
+    finally in.close()
   }
 
   /** Read back a curated tree with [[graft.taxi.TaxiSchemas.curated]]

@@ -16,20 +16,15 @@ object Manifest {
                          error: Option[String] = None,
                          rows: Option[Long] = None)
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   def append(path: String, e: Entry): Unit = {
-    val err = e.error.map(x => "\"" + esc(x) + "\"").getOrElse("null")
-    val rows = e.rows.map(r => s""","rows":$r""").getOrElse("")
-    val line = s"""{"url":"${esc(e.url)}","year_month":"${esc(e.yearMonth)}",""" +
-      s""""type":"${esc(e.cabType)}","downloaded":${e.downloaded},""" +
-      s""""size_bytes":${e.sizeBytes},"error":$err$rows}""" + "\n"
+    val o = json.createObjectNode()
+      .put("url", e.url).put("year_month", e.yearMonth).put("type", e.cabType)
+      .put("downloaded", e.downloaded).put("size_bytes", e.sizeBytes)
+    e.error.fold(o.putNull("error"))(o.put("error", _))
+    e.rows.foreach(o.put("rows", _))
+    val line = json.writeValueAsString(o) + "\n"
     Files.write(Paths.get(path), line.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
@@ -39,22 +34,16 @@ object Manifest {
     else {
       import scala.jdk.CollectionConverters._
       Files.readAllLines(Paths.get(path)).asScala.toSeq.filter(_.nonEmpty).map { l =>
-        def field(k: String): Option[String] = {
-          val m = ("\"" + k + "\":\\s*(\"(?:[^\"\\\\]|\\\\.)*\"|[^,}]+)").r
-            .findFirstMatchIn(l)
-          m.map(_.group(1)).map(v =>
-            if (v.startsWith("\"")) v.substring(1, v.length - 1)
-              .replace("\\\"", "\"").replace("\\\\", "\\")
-            else v)
-        }
+        val n = json.readTree(l)
+        def opt(k: String) = Option(n.get(k)).filterNot(_.isNull)
         Entry(
-          field("url").getOrElse(""),
-          field("year_month").getOrElse(""),
-          field("type").getOrElse(""),
-          field("downloaded").exists(_ == "true"),
-          field("size_bytes").map(_.toLong).getOrElse(0L),
-          field("error").filter(_ != "null"),
-          field("rows").map(_.toLong))
+          n.path("url").asText(""),
+          n.path("year_month").asText(""),
+          n.path("type").asText(""),
+          n.path("downloaded").asBoolean(false),
+          n.path("size_bytes").asLong(0L),
+          opt("error").map(_.asText),
+          opt("rows").map(_.asLong))
       }
     }
 

@@ -16,6 +16,10 @@ import graft.dedup.Dedup
   */
 object CorpusStreams {
 
+  /** Docs one band bucket may hold in the stateful screens' state
+    * before the screen refuses (see [[growingNearDupScreen]]). */
+  private val MaxStateDocs = 4096
+
   /** Streaming near-dup screen against a static corpus — the streaming
     * twin of [[Dedup.crossCorpusNearDups]]: incoming documents arrive
     * as file micro-batches; each batch is minhash-signed and LSH-banded
@@ -38,23 +42,21 @@ object CorpusStreams {
     * fresh and frozen with an eager localCheckpoint so every
     * micro-batch probes the identical index. */
   def nearDupScreenThroughStream(spark: SparkSession, incoming: DataFrame,
-                                 corpus: DataFrame, numHashes: Int = 64,
-                                 bands: Int = 16, shingleK: Int = 3,
-                                 maxBucket: Int = 64,
+                                 corpus: DataFrame,
                                  reproducible: Boolean = false,
                                  tau: Double = 0.5,
                                  inputFiles: Int = 3): DataFrame = {
-    val sigsC = Dedup.minhashSignatures(corpus, numHashes, shingleK,
-      reproducible).localCheckpoint(eager = true)
-    val bC = Dedup.bandedKeys(sigsC, numHashes, bands, reproducible)
+    val sigsC = Dedup.minhashSignatures(corpus, reproducible = reproducible)
+      .localCheckpoint(eager = true)
+    val bC = Dedup.bandedKeys(sigsC, Dedup.NumHashes, Dedup.Bands, reproducible)
     val bucketsC = bC.groupBy("band", "band_hash")
       .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
       .localCheckpoint(eager = true)
     val smallC = bC.join(bucketsC, Seq("band", "band_hash"))
-      .filter(col("bsz") <= maxBucket)
+      .filter(col("bsz") <= Dedup.MaxBucket)
       .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus"))
       .localCheckpoint(eager = true)
-    val starC = bucketsC.filter(col("bsz") > maxBucket)
+    val starC = bucketsC.filter(col("bsz") > Dedup.MaxBucket)
       .select(col("band"), col("band_hash"), col("rep").as("doc_corpus"))
       .localCheckpoint(eager = true)
     val sigC = sigsC.select(col("doc_id").as("doc_corpus"),
@@ -66,10 +68,11 @@ object CorpusStreams {
         val sigS = stream.select(col("doc_id").as("doc_in"),
           graft.functions.HashExpressions.minhashSignature(
             graft.functions.HashExpressions.shingleHashes(col("text"),
-              shingleK, fnv = reproducible), numHashes).as("sig"))
+              Dedup.ShingleK, fnv = reproducible), Dedup.NumHashes).as("sig"))
         val bS = sigS.select(col("doc_in"), col("sig").as("sig_i"),
             posexplode(array(
-              Dedup.bandKeyCols(numHashes, bands, reproducible): _*)))
+              Dedup.bandKeyCols(Dedup.NumHashes, Dedup.Bands,
+                reproducible): _*)))
           .select(col("doc_in"), col("sig_i"),
             col("pos").as("band"), col("col").as("band_hash"))
         val cands = bS.join(smallC, Seq("band", "band_hash"))
@@ -79,7 +82,8 @@ object CorpusStreams {
         cands.join(sigC, "doc_corpus")
           .select(col("doc_in"), col("doc_corpus"),
             (size(filter(zip_with(col("sig_i"), col("sig_c"),
-              (x, y) => x === y), eq => eq)).cast("double") / numHashes)
+              (x, y) => x === y), eq => eq)).cast("double") /
+              Dedup.NumHashes)
               .as("est_jaccard"))
           .filter(col("est_jaccard") >= tau)
     }
@@ -117,7 +121,7 @@ object CorpusStreams {
     * `bands · (8·numHashes + 16)` bytes per accepted doc, linear in the
     * batch horizon, NOT in the static corpus (that side lives in the
     * persisted band index, `Dedup.saveBandIndex`). A bucket that
-    * outgrows `maxStateDocs` REFUSES loudly (the
+    * outgrows `MaxStateDocs` REFUSES loudly (the
     * [[graft.dedup.StarComponents]] contract) instead of silently
     * degrading — the production remedies: fold the horizon into the
     * persisted index with [[graft.dedup.Dedup.compactBandIndex]] (a
@@ -129,15 +133,12 @@ object CorpusStreams {
     * horizon" — SCALE.md's Streaming section tabulates the state-size
     * arithmetic. */
   def growingNearDupScreen(spark: SparkSession, incoming: DataFrame,
-                           corpus: DataFrame, numHashes: Int = 64,
-                           bands: Int = 16, shingleK: Int = 3,
-                           maxBucket: Int = 64,
+                           corpus: DataFrame,
                            reproducible: Boolean = false,
-                           tau: Double = 0.5, inputFiles: Int = 3,
-                           maxStateDocs: Int = 4096): DataFrame =
+                           tau: Double = 0.5, inputFiles: Int = 3): DataFrame =
     growingNearDupScreenWithIndex(spark, incoming,
-      Dedup.buildBandIndex(corpus, numHashes, bands, shingleK, reproducible),
-      maxBucket, tau, inputFiles, maxStateDocs)
+      Dedup.buildBandIndex(corpus, reproducible = reproducible),
+      tau, inputFiles)
 
   /** [[growingNearDupScreen]] against a (typically RELOADED) persisted
     * band index — the actual production loop at 100 TB: the corpus
@@ -149,9 +150,8 @@ object CorpusStreams {
     * both (st14/st16). */
   def growingNearDupScreenWithIndex(spark: SparkSession, incoming: DataFrame,
                                     index: Dedup.BandIndex,
-                                    maxBucket: Int = 64, tau: Double = 0.5,
-                                    inputFiles: Int = 3,
-                                    maxStateDocs: Int = 4096): DataFrame = {
+                                    tau: Double = 0.5,
+                                    inputFiles: Int = 3): DataFrame = {
     val numHashes = index.numHashes
     val bands = index.numBands
     val shingleK = index.shingleK
@@ -170,10 +170,10 @@ object CorpusStreams {
     val bucketsC = frozen("buckets")(index.buckets)
     val smallC = frozen("small-buckets")(
       index.bands.join(bucketsC, Seq("band", "band_hash"))
-        .filter(col("bsz") <= maxBucket)
+        .filter(col("bsz") <= Dedup.MaxBucket)
         .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus")))
     val starC = frozen("star-buckets")(
-      bucketsC.filter(col("bsz") > maxBucket)
+      bucketsC.filter(col("bsz") > Dedup.MaxBucket)
         .select(col("band"), col("band_hash"), col("rep").as("doc_corpus")))
     val sigCorpus = frozen("signatures")(
       index.signatures.select(col("doc_id").as("doc_corpus"),
@@ -218,8 +218,8 @@ object CorpusStreams {
             // emits" rule batch-split-invariant
             it.toSeq.sortBy(_.doc_id).foreach { d =>
               if (!held.exists(_.doc_id == d.doc_id)) {
-                require(held.size < maxStateDocs,
-                  s"band bucket outgrew maxStateDocs=$maxStateDocs — " +
+                require(held.size < MaxStateDocs,
+                  s"band bucket outgrew maxStateDocs=$MaxStateDocs — " +
                     "refusing to screen against a truncated horizon; " +
                     "compact the horizon into the persisted band index " +
                     "(Dedup.compactBandIndex) or raise the bound")
@@ -284,15 +284,12 @@ object CorpusStreams {
                                       corpus: DataFrame,
                                       horizonSeconds: Long,
                                       watermarkDelay: String = "5 minutes",
-                                      numHashes: Int = 64, bands: Int = 16,
-                                      shingleK: Int = 3, maxBucket: Int = 64,
                                       reproducible: Boolean = false,
-                                      tau: Double = 0.5, inputFiles: Int = 3,
-                                      maxStateDocs: Int = 4096): DataFrame =
+                                      tau: Double = 0.5,
+                                      inputFiles: Int = 3): DataFrame =
     growingNearDupScreenWatermarkedWithIndex(spark, incoming,
-      Dedup.buildBandIndex(corpus, numHashes, bands, shingleK, reproducible),
-      horizonSeconds, watermarkDelay, maxBucket, tau, inputFiles,
-      maxStateDocs)
+      Dedup.buildBandIndex(corpus, reproducible = reproducible),
+      horizonSeconds, watermarkDelay, tau, inputFiles)
 
   /** [[growingNearDupScreenWatermarked]] against a (typically RELOADED)
     * persisted band index — time-bounded state AND a never-re-signed
@@ -308,10 +305,8 @@ object CorpusStreams {
                                                index: Dedup.BandIndex,
                                                horizonSeconds: Long,
                                                watermarkDelay: String = "5 minutes",
-                                               maxBucket: Int = 64,
                                                tau: Double = 0.5,
-                                               inputFiles: Int = 3,
-                                               maxStateDocs: Int = 4096): DataFrame = {
+                                               inputFiles: Int = 3): DataFrame = {
     require(horizonSeconds > 0, s"horizonSeconds must be > 0, got $horizonSeconds")
     val numHashes = index.numHashes
     val bands = index.numBands
@@ -331,10 +326,10 @@ object CorpusStreams {
     val bucketsC = frozen("buckets")(index.buckets)
     val smallC = frozen("small-buckets")(
       index.bands.join(bucketsC, Seq("band", "band_hash"))
-        .filter(col("bsz") <= maxBucket)
+        .filter(col("bsz") <= Dedup.MaxBucket)
         .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus")))
     val starC = frozen("star-buckets")(
-      bucketsC.filter(col("bsz") > maxBucket)
+      bucketsC.filter(col("bsz") > Dedup.MaxBucket)
         .select(col("band"), col("band_hash"), col("rep").as("doc_corpus")))
     val sigCorpus = frozen("signatures")(
       index.signatures.select(col("doc_id").as("doc_corpus"),
@@ -394,8 +389,8 @@ object CorpusStreams {
               // batch-split-invariant inside one invocation
               it.toSeq.sortBy(d => (d.ts.getTime, d.doc_id)).foreach { d =>
                 if (!held.exists(_.doc_id == d.doc_id)) {
-                  require(held.size < maxStateDocs,
-                    s"band bucket outgrew maxStateDocs=$maxStateDocs within " +
+                  require(held.size < MaxStateDocs,
+                    s"band bucket outgrew maxStateDocs=$MaxStateDocs within " +
                       "the horizon — raise the bound or shorten the horizon")
                   val t = d.ts.getTime
                   held.foreach { p =>

@@ -24,19 +24,19 @@ object EventStreams {
   final case class SessionOut(user_id: Long, session_end_ts: Timestamp, n_events: Long)
 
   /** Tumbling-window counts by event type with a watermark for state
-    * eviction — at scale, state size is bounded by (windows in flight ×
-    * types), independent of throughput. */
-  def windowedCounts(events: DataFrame, window_ : String = "1 hour",
+    * eviction (1-hour windows) — at scale, state size is bounded by
+    * (windows in flight × types), independent of throughput. */
+  def windowedCounts(events: DataFrame,
                      watermark: String = "2 hours"): DataFrame = {
     val src = if (events.isStreaming) events.withWatermark("ts", watermark) else events
-    src.groupBy(window(col("ts"), window_).as("w"), col("event_type"))
+    src.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("w.start").as("window_start"), col("event_type"), col("cnt"))
   }
 
   /** Built-in session-window aggregation: per-user sessions that merge
-    * while consecutive events arrive within `gap` and close at
-    * last-event + gap — the declarative twin of [[sessionizeStream]]'s
+    * while consecutive events arrive within a 30-minute `gap` and close
+    * at last-event + gap — the declarative twin of [[sessionizeStream]]'s
     * explicit mapGroupsWithState (use THIS unless the session logic
     * needs custom state; Catalyst plans the merge, and the state store
     * handles out-of-order arrival by merging overlapping windows).
@@ -46,27 +46,27 @@ object EventStreams {
     * previous event is STRICTLY greater than `gap` (the session end
     * `last + gap` is an inclusive merge bound — spec-asserted).
     * Works on batch frames too — same plan minus the state store. */
-  def sessionWindowCounts(events: DataFrame, gap: String = "30 minutes",
-                          watermark: String = "35 days"): DataFrame = {
+  def sessionWindowCounts(events: DataFrame): DataFrame = {
     val src =
-      if (events.isStreaming) events.withWatermark("ts", watermark) else events
-    src.groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
+      if (events.isStreaming) events.withWatermark("ts", "35 days") else events
+    src.groupBy(col("user_id"),
+        session_window(col("ts"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 4).as("value_sum"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("n_events"), col("value_sum"))
   }
 
-  /** Gap-based sessionization with explicit state + EVENT-TIME timeout:
+  /** Gap-based sessionization (30-minute gap, 2-hour watermark) with
+    * explicit state + EVENT-TIME timeout:
     * when the watermark passes an idle user's last event + gap, the open
     * session is emitted and its state removed — without the timeout a
     * user who never returns would hold state forever (unbounded growth)
     * and their final session would never be output. Batch input takes a
     * plain flatMapGroups that flushes the trailing session, matching
     * [[graft.operators.Windows.sessionize]] session counts. */
-  def sessionizeStream(events: Dataset[Event], gapMinutes: Int = 30,
-                       watermark: String = "2 hours"): Dataset[SessionOut] = {
+  def sessionizeStream(events: Dataset[Event]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60 * 1000L
+    val gapMs = 30 * 60 * 1000L
     if (!events.isStreaming) {
       events.groupByKey(_.user_id).flatMapGroups { (userId, it) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
@@ -83,7 +83,7 @@ object EventStreams {
         out.iterator
       }
     } else events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "2 hours")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
@@ -405,29 +405,27 @@ object EventStreams {
     * Exposed so the spec can replay a batch id and assert idempotence
     * directly, without staging a runtime failure. */
   def landCuratedBatch(batch: DataFrame, batchId: Long, path: String,
-                       partitionCols: Seq[String],
-                       widen: Boolean = false): Unit =
+                       partitionCols: Seq[String]): Unit =
     graft.sources.CuratedWriter.writePartitionedIncrementalChecked(
       batch.withColumn("_batch_id", lit(batchId)),
-      path, "_batch_id" +: partitionCols, widen)
+      path, "_batch_id" +: partitionCols, false)
 
   /** Production file sink for a stream: every micro-batch lands in a
     * partitioned curated parquet tree through the SAME write-boundary
     * guarantees as batch ingestion — the schema-drift guard refuses a
     * silently drifted upstream (failing the query rather than
-    * corrupting the tree; `widen = true` accepts drift explicitly), and
+    * corrupting the tree), and
     * overwrite-by-batch-id makes retries idempotent (exactly-once
     * contents under foreachBatch's at-least-once replay). Readers
     * `spark.read.parquet(path)` and drop `_batch_id`, or prune on it
     * for incremental downstream consumption. */
   def writeCuratedStream(stream: DataFrame, path: String,
-                         partitionCols: Seq[String], checkpoint: String,
-                         widen: Boolean = false)
+                         partitionCols: Seq[String], checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landCuratedBatch(batch, batchId, path, partitionCols, widen)
+        landCuratedBatch(batch, batchId, path, partitionCols)
       }
       .start()
 

@@ -72,14 +72,14 @@ object Cleaning {
 
   /** P13 time-feature projection (`utils.py:79-81`,
     * `etl_yellow_s3_v2.py:74-77`). */
-  def withTimeFeatures(trips: DataFrame, tsCol: String = "pickup_ts"): DataFrame =
+  def withTimeFeatures(trips: DataFrame): DataFrame =
     trips
-      .withColumn("pickup_date", to_date(col(tsCol)))
-      .withColumn("pickup_hour", hour(col(tsCol)))
-      .withColumn("pickup_dow", date_format(col(tsCol), "E"))
-      .withColumn("pickup_year", year(col(tsCol)))
-      .withColumn("pickup_month", month(col(tsCol)))
-      .withColumn("pickup_ym", date_format(col(tsCol), "yyyy-MM"))
+      .withColumn("pickup_date", to_date(col("pickup_ts")))
+      .withColumn("pickup_hour", hour(col("pickup_ts")))
+      .withColumn("pickup_dow", date_format(col("pickup_ts"), "E"))
+      .withColumn("pickup_year", year(col("pickup_ts")))
+      .withColumn("pickup_month", month(col("pickup_ts")))
+      .withColumn("pickup_ym", date_format(col("pickup_ts"), "yyyy-MM"))
 
   /** Feature projection: speed + fare-per-mile (P10/P11). */
   def withRatios(trips: DataFrame): DataFrame =

@@ -30,6 +30,11 @@ import org.apache.spark.sql.functions._
   * the chosen model size. */
 object BigramLm {
 
+  /** Bigram-model cut (top-K by count) and the interpolation weight λ;
+    * the unigram, head and continuation tables are cut at 1000. */
+  private val BigramVocab = 2000
+  private val Lambda = 0.7
+
   /** (prev, cur, bigram-string) structs, row-local; docs with fewer
     * than 2 tokens yield the empty array. Formed as ONE `zip_with` over
     * two shifted slices so the tokenize expression evaluates O(1) times
@@ -53,8 +58,7 @@ object BigramLm {
     * log-probability: (lang, n_docs, mean_logp, min_logp, max_logp).
     * Documents with fewer than 2 tokens drop out (no bigram is
     * defined). */
-  def scoreByLang(documents: DataFrame, bigramVocab: Int = 2000,
-                  unigramVocab: Int = 1000, lambda: Double = 0.7): DataFrame = {
+  def scoreByLang(documents: DataFrame): DataFrame = {
     // the ONLY corpus-sized explode — persisted, consumed twice (model
     // count + scoring pass), released after the eager materialization
     val bgs = documents
@@ -64,7 +68,7 @@ object BigramLm {
         col("b.prev").as("prev"), col("b.cur").as("cur"), col("b.bg").as("bg"))
       .persist()
     val bgCounts = bgs.groupBy("bg").agg(count(lit(1)).as("bcnt"))
-    val bgModel = bgCounts.orderBy(desc("bcnt"), asc("bg")).limit(bigramVocab)
+    val bgModel = bgCounts.orderBy(desc("bcnt"), asc("bg")).limit(BigramVocab)
     // c₁ = occurrences as a bigram HEAD. Derived by re-aggregating the
     // DISTINCT-BIGRAM count table (vocabulary-sized) by head — NOT by a
     // second explode of the corpus: Σ bcnt over a head's bigrams is the
@@ -89,7 +93,7 @@ object BigramLm {
       .select(col("tok"),
         (coalesce(col("hcnt"), lit(0L)) + coalesce(col("lcnt"), lit(0L)))
           .as("ucnt"))
-    val uniModel = uniCounts.orderBy(desc("ucnt"), asc("tok")).limit(unigramVocab)
+    val uniModel = uniCounts.orderBy(desc("ucnt"), asc("tok")).limit(1000)
     val uniTotal = uniCounts.agg(sum("ucnt").cast("double").as("_n"))
 
     // fold the model's head counts into the bigram model itself — ONE
@@ -108,8 +112,8 @@ object BigramLm {
           Seq("cur"), "left")
         .crossJoin(broadcast(uniTotal))
         .select(col("doc_id"), col("lang"),
-          log(lit(lambda) * coalesce(col("_bp"), lit(0.0))
-            + lit(1.0 - lambda)
+          log(lit(Lambda) * coalesce(col("_bp"), lit(0.0))
+            + lit(1.0 - Lambda)
               * coalesce(col("ucnt").cast("double"), lit(0.5)) / col("_n"))
             .as("lp"))
         .groupBy("doc_id", "lang")
@@ -146,9 +150,7 @@ object BigramLm {
     * derived table (head counts, continuation counts, type total) is a
     * re-aggregation of the vocabulary-sized bigram count table, never a
     * second corpus pass. */
-  def scoreByLangKN(documents: DataFrame, bigramVocab: Int = 2000,
-                    prevVocab: Int = 1000, contVocab: Int = 1000,
-                    discount: Double = 0.75): DataFrame = {
+  def scoreByLangKN(documents: DataFrame, discount: Double = 0.75): DataFrame = {
     require(discount > 0 && discount < 1, s"discount must be in (0,1)")
     val bgs = documents
       .select(col("doc_id"), col("lang"),
@@ -164,14 +166,14 @@ object BigramLm {
       .agg(sum("bcnt").as("hcnt"), count(lit(1)).as("nf"))
     val contCounts = keyed.groupBy("cur").agg(count(lit(1)).as("np"))
     val nTypes = bgCounts.agg(count(lit(1)).cast("double").as("_t"))
-    val bgModel = keyed.orderBy(desc("bcnt"), asc("bg")).limit(bigramVocab)
+    val bgModel = keyed.orderBy(desc("bcnt"), asc("bg")).limit(BigramVocab)
       .join(headCounts, "prev")
       .select(col("bg"),
         (greatest(col("bcnt").cast("double") - discount, lit(0.0))
           / col("hcnt")).as("_bp"))
-    val prevModel = headCounts.orderBy(desc("hcnt"), asc("prev")).limit(prevVocab)
+    val prevModel = headCounts.orderBy(desc("hcnt"), asc("prev")).limit(1000)
       .select(col("prev"), (lit(discount) * col("nf") / col("hcnt")).as("_w"))
-    val contModel = contCounts.orderBy(desc("np"), asc("cur")).limit(contVocab)
+    val contModel = contCounts.orderBy(desc("np"), asc("cur")).limit(1000)
     try {
       bgs
         .join(broadcast(bgModel), Seq("bg"), "left")

@@ -21,26 +21,28 @@ import org.apache.spark.sql.functions._
   */
 object Bm25 {
 
-  /** Top-k `(doc_id, bm25)` for one query, scored over `textCol` of
+  /** The term-frequency saturation constant k1. */
+  private val K1 = 1.2
+
+  /** Top-k `(doc_id, bm25)` for one query, scored over `text` of
     * `documents`. Scores are rounded to 6 decimals and ties broken by
     * `doc_id` so the ranking is a pure function of the corpus. */
   def topK(documents: DataFrame, queryTerms: Seq[String], k: Int = 20,
-           k1: Double = 1.2, b: Double = 0.75, idCol: String = "doc_id",
-           textCol: String = "text"): DataFrame = {
+           b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "bm25: queryTerms must be non-empty")
     require(queryTerms.distinct == queryTerms, "bm25: duplicate query terms")
-    require(k1 > 0 && b >= 0 && b <= 1, s"bm25: invalid k1=$k1 b=$b")
-    val docs = documents.select(col(idCol),
-      TextAnalysis.tokens(col(textCol)).as("_toks"))
-      .select(col(idCol), size(col("_toks")).as("_dl"),
+    require(b >= 0 && b <= 1, s"bm25: invalid b=$b")
+    val docs = documents.select(col("doc_id"),
+      TextAnalysis.tokens(col("text")).as("_toks"))
+      .select(col("doc_id"), size(col("_toks")).as("_dl"),
         // row-local per-term tf: (term, count of exact matches in doc)
         transform(lit(queryTerms.toArray),
           t => struct(t.as("term"),
             size(filter(col("_toks"), x => x === t)).as("tf"))).as("_tfs"))
     val stats = docs.agg(count(lit(1)).as("_n"), avg("_dl").as("_avgdl"))
     val candidates = docs
-      .select(col(idCol), col("_dl"), explode(col("_tfs")).as("_t"))
-      .select(col(idCol), col("_dl"), col("_t.term").as("term"),
+      .select(col("doc_id"), col("_dl"), explode(col("_tfs")).as("_t"))
+      .select(col("doc_id"), col("_dl"), col("_t.term").as("term"),
         col("_t.tf").as("tf"))
       .filter(col("tf") > 0)
     val dfByTerm = candidates.groupBy("term").agg(count(lit(1)).as("_df"))
@@ -49,12 +51,12 @@ object Bm25 {
       .crossJoin(broadcast(stats))
       .withColumn("_idf",
         log(lit(1.0) + (col("_n") - col("_df") + 0.5) / (col("_df") + 0.5)))
-      .withColumn("_w", col("_idf") * col("tf") * (lit(k1) + 1.0) /
-        (col("tf") + lit(k1) *
+      .withColumn("_w", col("_idf") * col("tf") * (lit(K1) + 1.0) /
+        (col("tf") + lit(K1) *
           (lit(1.0) - lit(b) + lit(b) * col("_dl") / col("_avgdl"))))
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(round(sum("_w"), 6).as("bm25"))
-      .orderBy(col("bm25").desc, col(idCol))
+      .orderBy(col("bm25").desc, col("doc_id"))
       .limit(k)
   }
 }

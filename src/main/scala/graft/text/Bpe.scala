@@ -55,9 +55,9 @@ object Bpe {
 
   /** The word-frequency table with the initial character-level symbol
     * state: `(word, freq, s)`. */
-  private def wordTable(docs: DataFrame, textCol: String): DataFrame =
+  private def wordTable(docs: DataFrame): DataFrame =
     docs
-      .select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
+      .select(explode(TextAnalysis.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .withColumn("s", concat(lit(" "),
         array_join(filter(split(col("word"), ""), c => length(c) > 0), "  "),
@@ -90,10 +90,9 @@ object Bpe {
     * floors — use [[trainLocal]] (bit-identical, measured 15.6× at 128
     * merges and growing linearly) unless the word table genuinely
     * exceeds driver memory. */
-  def train(docs: DataFrame, nMerges: Int = 10,
-            textCol: String = "text"): (Seq[Merge], DataFrame) = {
+  def train(docs: DataFrame, nMerges: Int = 10): (Seq[Merge], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var cur = wordTable(docs, textCol).localCheckpoint(true)
+    var cur = wordTable(docs).localCheckpoint(true)
     var counts = cur
       .select(col("freq"), explode(pairsOf(col("s"))).as("pr"))
       .groupBy("pr").agg(sum("freq").as("cnt"))
@@ -148,14 +147,13 @@ object Bpe {
     * UTF-8 bytes, the binary order Spark's `asc` and DuckDB's ORDER BY
     * both apply. Returns the same `(merges, word table)` pair, the
     * word table in the same (word, freq, s) final symbol state. */
-  def trainLocal(docs: DataFrame, nMerges: Int = 10,
-                 textCol: String = "text"): (Seq[Merge], DataFrame) = {
+  def trainLocal(docs: DataFrame, nMerges: Int = 10): (Seq[Merge], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = docs.sparkSession
     // vocab-sized: one row per distinct word; symbols parsed from the
     // SAME delimited state string the distributed rounds rewrite, so
     // Spark's own character splitting is reused verbatim
-    val collected = wordTable(docs, textCol).collect()
+    val collected = wordTable(docs).collect()
     val wordArr = collected.map(_.getString(0))
     val freqArr = collected.map(_.getLong(1))
     val symArr: Array[Array[String]] =
@@ -251,10 +249,10 @@ object Bpe {
     * kept ONLY as the equivalence oracle for [[train]]'s delta counting
     * (BpeSpec asserts bit-identical merge tables); never the production
     * path. */
-  private[graft] def trainRecount(docs: DataFrame, nMerges: Int = 10,
-                                  textCol: String = "text"): (Seq[Merge], DataFrame) = {
+  private[graft] def trainRecount(docs: DataFrame,
+                                  nMerges: Int = 10): (Seq[Merge], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    val words = wordTable(docs, textCol).persist()
+    val words = wordTable(docs).persist()
     try {
       var cur = words
       val merges = (1 to nMerges).map { r =>
@@ -336,9 +334,8 @@ object Bpe {
     * The merge table is a driver-side `Seq` (N rows — the model), so
     * the replay is a pure projection chain: zero joins, zero extra
     * shuffles beyond the one word-count aggregation. */
-  def encode(docs: DataFrame, merges: Seq[Merge],
-             textCol: String = "text"): DataFrame = {
-    val encoded = merges.sortBy(_.step).foldLeft(wordTable(docs, textCol)) {
+  def encode(docs: DataFrame, merges: Seq[Merge]): DataFrame = {
+    val encoded = merges.sortBy(_.step).foldLeft(wordTable(docs)) {
       (df, m) =>
         val next = df.withColumn("s", replace(col("s"),
           lit(" " + m.pair.replace(" ", "  ") + " "), lit(s" ${m.merged} ")))

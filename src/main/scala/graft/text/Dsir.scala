@@ -40,13 +40,12 @@ object Dsir {
     * smoothing over the `buckets` bins (target model fit on `isTarget`
     * rows, raw model on the rest). Documents with zero features (empty
     * text) drop out — run the length filters first. Output:
-    * `(idCol, n_features, log_w)`. */
+    * `(doc_id, n_features, log_w)`. */
   def importanceWeights(documents: DataFrame, isTarget: Column,
-                        buckets: Int = 8192, idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame = {
+                        buckets: Int = 8192): DataFrame = {
     require(buckets > 0, s"dsir: buckets must be positive, got $buckets")
-    val feat = documents.select(col(idCol), isTarget.as("_t"),
-      explode(featureBuckets(col(textCol), buckets)).as("_b"))
+    val feat = documents.select(col("doc_id"), isTarget.as("_t"),
+      explode(featureBuckets(col("text"), buckets)).as("_b"))
     val model = feat.filter(col("_t")).groupBy("_b")
       .agg(count(lit(1)).as("_ct"))
       .join(feat.filter(!col("_t")).groupBy("_b")
@@ -61,7 +60,7 @@ object Dsir {
           - log((col("_cr") + 1.0) / (col("_tr") + buckets))).as("_lr"))
     feat.filter(!col("_t"))
       .join(broadcast(logRatio), Seq("_b"))
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_features"), sum("_lr").as("log_w"))
   }
 
@@ -70,17 +69,16 @@ object Dsir {
     * sampling WITHOUT replacement with inclusion probability
     * proportional to the importance weight `e^{log_w}`, as a pure
     * function of (corpus, buckets, seed). Output adds the perturbed
-    * `gumbel_key`, ranked descending with `idCol` tiebreak. */
+    * `gumbel_key`, ranked descending with `doc_id` tiebreak. */
   def selectTopK(documents: DataFrame, isTarget: Column, k: Int,
-                 buckets: Int = 8192, seed: Long = 42L,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                 buckets: Int = 8192, seed: Long = 42L): DataFrame = {
     require(k > 0, s"dsir: k must be positive, got $k")
     val u = (pmod(HashExpressions.fnv1a32(
-        concat(col(idCol).cast("string"), lit(":"), lit(seed.toString))),
+        concat(col("doc_id").cast("string"), lit(":"), lit(seed.toString))),
       lit(1000000L)).cast("double") + 0.5) / 1000000.0
-    importanceWeights(documents, isTarget, buckets, idCol, textCol)
+    importanceWeights(documents, isTarget, buckets)
       .withColumn("gumbel_key", col("log_w") - log(-log(u)))
-      .orderBy(col("gumbel_key").desc, col(idCol))
+      .orderBy(col("gumbel_key").desc, col("doc_id"))
       .limit(k)
   }
 }

@@ -96,10 +96,10 @@ object HtmlExtract {
     * `text` column every downstream corpus operator expects. */
   def htmlToText(html: Column): Column = array_join(htmlToBlocks(html), "\n")
 
-  /** Convenience projection: replaces `htmlCol` with extracted `text`
+  /** Convenience projection: replaces `html` with extracted `text`
     * and `blocks`, keeping every other column. */
-  def extract(df: DataFrame, htmlCol: String = "html"): DataFrame =
-    df.withColumn("blocks", htmlToBlocks(col(htmlCol)))
+  def extract(df: DataFrame): DataFrame =
+    df.withColumn("blocks", htmlToBlocks(col("html")))
       .withColumn("text", array_join(col("blocks"), "\n"))
-      .drop(htmlCol)
+      .drop("html")
 }

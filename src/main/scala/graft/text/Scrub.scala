@@ -25,13 +25,13 @@ object Scrub {
   val EmailToken = "<EMAIL>"
   val IpToken = "<IP>"
 
-  /** Redact emails then IPs in `textCol` (order matters only in that an
+  /** Redact emails then IPs in `text` (order matters only in that an
     * email's host part must not be half-eaten by the IP pass — emails
     * are replaced first, and the placeholder contains no digits). */
-  def scrubPii(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.withColumn(textCol,
+  def scrubPii(df: DataFrame): DataFrame =
+    df.withColumn("text",
       regexp_replace(
-        regexp_replace(col(textCol), EmailRe, EmailToken),
+        regexp_replace(col("text"), EmailRe, EmailToken),
         Ipv4Re, IpToken))
 
   /** Per-source redaction report over an already-scrubbed frame:

@@ -272,7 +272,7 @@ object TextAnalysis {
     * partial→final count keyed by the pair string; top-k via
     * TakeOrderedAndProject. At 100 TB this is the map-side-combine shape
     * (pair cardinality ≪ corpus size), not an explode-then-sort. */
-  def topBigrams(documents: DataFrame, k: Int = 50): DataFrame = {
+  def topBigrams(documents: DataFrame): DataFrame = {
     // tokenize in its own projection so CollapseProject cannot re-inline
     // the split into every consumer; pair via zip_with over the two
     // shifted slices (one pass over the array, no per-index element_at)
@@ -282,7 +282,7 @@ object TextAnalysis {
       .groupBy("bigram")
       .agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("bigram"))
-      .limit(k)
+      .limit(50)
   }
 
   /** Per-language Zipf rank-frequency slope: the OLS slope of
@@ -466,8 +466,8 @@ object TextAnalysis {
   /** C4-style line filtering (Raffel et al. 2020 §2.2, the "Colossal
     * Clean Crawled Corpus" heuristics, thresholds scaled to corpus):
     * a LINE survives when it ends in terminal punctuation (`. ! ? "`),
-    * has at least `minWords` whitespace words, and doesn't mention
-    * javascript; a DOCUMENT survives when at least `minLines` of its
+    * has at least 3 whitespace words, and doesn't mention
+    * javascript; a DOCUMENT survives when at least 2 of its
     * lines survived and the raw text contains neither "lorem ipsum"
     * nor a curly brace. Adds `lines_in`, `lines_kept`, `clean_text`
     * (surviving lines re-joined), and `doc_kept`.
@@ -475,11 +475,10 @@ object TextAnalysis {
     * Entirely row-local — split/filter/array_join higher-order
     * functions inside whole-stage codegen, zero shuffle — so the
     * filter streams over a 100 TB crawl at scan speed. */
-  def c4LineFilter(documents: DataFrame, minWords: Int = 3,
-                   minLines: Int = 2): DataFrame = {
+  def c4LineFilter(documents: DataFrame): DataFrame = {
     val keptLines = filter(split(col("text"), "\n"), l =>
       l.rlike("[.!?\"]$") &&
-        size(tokens(l)) >= minWords &&
+        size(tokens(l)) >= 3 &&
         !lower(l).contains("javascript"))
     documents
       .withColumn("lines_in", size(split(col("text"), "\n")))
@@ -487,7 +486,7 @@ object TextAnalysis {
       .withColumn("lines_kept", size(col("kept")))
       .withColumn("clean_text", array_join(col("kept"), "\n"))
       .withColumn("doc_kept",
-        col("lines_kept") >= minLines &&
+        col("lines_kept") >= 2 &&
           !lower(col("text")).contains("lorem ipsum") &&
           !col("text").contains("{"))
       .drop("kept")
@@ -535,7 +534,6 @@ object TextAnalysis {
     * arithmetic inside whole-stage codegen, zero shuffle: the battery
     * streams over a 100 TB crawl at scan speed, like [[c4LineFilter]]. */
   def gopherRules(documents: DataFrame, minWords: Int = 50,
-                  maxWords: Int = 100000,
                   requiredWords: Seq[String] =
                     Seq("the", "be", "to", "of", "and", "that", "have", "with"))
       : DataFrame = {
@@ -546,7 +544,7 @@ object TextAnalysis {
       .withColumn("_w", toksC).withColumn("_l", linesC)
       .withColumn("_nw", size(col("_w")))
       .withColumn("r_wordcount",
-        col("_nw") >= minWords && col("_nw") <= maxWords)
+        col("_nw") >= minWords && col("_nw") <= 100000)
       .withColumn("r_meanlen", {
         val mean = aggregate(col("_w"), lit(0L), (acc, t) => acc + length(t))
           .cast("double") / col("_nw")
@@ -584,12 +582,11 @@ object TextAnalysis {
     * table a pipeline reads before deciding which thresholds to tune.
     * One partial→final aggregation over language keys. */
   def gopherRuleCensus(documents: DataFrame, minWords: Int = 50,
-                       maxWords: Int = 100000,
                        requiredWords: Seq[String] =
                          Seq("the", "be", "to", "of", "and", "that", "have", "with"))
       : DataFrame = {
     def fails(c: String) = count(when(!col(c), 1)).as(s"f_${c.stripPrefix("r_")}")
-    gopherRules(documents, minWords, maxWords, requiredWords)
+    gopherRules(documents, minWords, requiredWords = requiredWords)
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         count(when(col("gopher_pass"), 1)).as("n_pass"),
@@ -602,9 +599,8 @@ object TextAnalysis {
   /** Per-source census of a [[c4LineFilter]] pass: document and line
     * keep counts plus character mass and an FNV sum over the cleaned
     * text of surviving documents (byte-level pin of `clean_text`). */
-  def c4FilterStats(documents: DataFrame, minWords: Int = 3,
-                    minLines: Int = 2): DataFrame =
-    c4LineFilter(documents, minWords, minLines)
+  def c4FilterStats(documents: DataFrame): DataFrame =
+    c4LineFilter(documents)
       .groupBy("source")
       .agg(count(lit(1)).as("docs_in"),
         count(when(col("doc_kept"), 1)).as("docs_kept"),

@@ -64,9 +64,8 @@ object UnigramTokenizer {
 
   /** (word, freq, n) over [[TextAnalysis.tokens]], capped at
     * `maxWordLen` characters. */
-  def wordTable(docs: DataFrame, p: Params = Params(),
-                textCol: String = "text"): DataFrame =
-    docs.select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
+  def wordTable(docs: DataFrame, p: Params = Params()): DataFrame =
+    docs.select(explode(TextAnalysis.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .withColumn("n", length(col("word")).cast("int"))
       .filter(col("n").between(1, p.maxWordLen))
@@ -194,11 +193,10 @@ object UnigramTokenizer {
     * E-step (round `emRounds`) is not followed by a prune, so the
     * returned vocabulary, counts, segmentations, and likelihood are
     * mutually consistent. */
-  def train(docs: DataFrame, p: Params = Params(),
-            textCol: String = "text"): (DataFrame, DataFrame) = {
+  def train(docs: DataFrame, p: Params = Params()): (DataFrame, DataFrame) = {
     require(p.emRounds >= 1 && p.maxPieceLen >= 1 && p.maxWordLen >= 1,
       s"unigram: degenerate params $p")
-    val words = wordTable(docs, p, textCol).localCheckpoint(eager = true)
+    val words = wordTable(docs, p).localCheckpoint(eager = true)
     var vocab = seedVocab(words, p).localCheckpoint(eager = true)
     var keep = p.seedMultis
     var seg: DataFrame = null
@@ -223,8 +221,8 @@ object UnigramTokenizer {
 
   /** Gate surface 1: the final vocabulary — (piece, cnt, score_fp),
     * count desc / piece asc. Every row is pinned (the whole model). */
-  def vocabTable(docs: DataFrame, p: Params = Params()): DataFrame =
-    train(docs, p)._1
+  def vocabTable(docs: DataFrame): DataFrame =
+    train(docs)._1
       .withColumnRenamed("sc", "score_fp")
       .orderBy(desc("cnt"), asc("piece"))
 
@@ -236,9 +234,8 @@ object UnigramTokenizer {
   final case class Model(vocab: DataFrame, params: Params)
 
   /** Train and package as a [[Model]]. */
-  def trainModel(docs: DataFrame, p: Params = Params(),
-                 textCol: String = "text"): Model =
-    Model(train(docs, p, textCol)._1.select("piece", "cnt"), p)
+  def trainModel(docs: DataFrame, p: Params = Params()): Model =
+    Model(train(docs, p)._1.select("piece", "cnt"), p)
 
   /** Persist a trained model ([[graft.similarity.Ivf.save]] /
     * `Dedup.saveBandIndex` pattern): vocabulary parquet plus a one-row
@@ -273,9 +270,8 @@ object UnigramTokenizer {
 
   /** [[segment]] under a (typically reloaded) [[Model]] — inference
     * always runs with the params the model was trained under. */
-  def segmentWith(model: Model, target: DataFrame,
-                  textCol: String = "text"): DataFrame =
-    segment(target, model.vocab, model.params, textCol)
+  def segmentWith(model: Model, target: DataFrame): DataFrame =
+    segment(target, model.vocab, model.params)
 
   /** INFERENCE: segment a NEW corpus's words under an already-trained
     * `(piece, cnt)` vocabulary — the unigram sibling of [[Bpe.encode]].
@@ -284,28 +280,26 @@ object UnigramTokenizer {
     * unseen alphabets segment character-by-character instead of
     * failing. Returns (word, freq, n, pieces, ll_fp) over the TARGET's
     * word table. */
-  def segment(target: DataFrame, vocab: DataFrame, p: Params = Params(),
-              textCol: String = "text"): DataFrame = {
+  def segment(target: DataFrame, vocab: DataFrame,
+              p: Params = Params()): DataFrame = {
     val unk = vocab.agg(sum("cnt").cast("double").as("tot"),
         count(lit(1)).cast("double").as("vsz"))
       .select(floor(log(lit(1.0) / (col("tot") + col("vsz")))
         * ScoreScale).cast("long").as("unk"))
-    viterbi(wordTable(target, p, textCol), scoresOf(vocab), p, Some(unk))
+    viterbi(wordTable(target, p), scoresOf(vocab), p, Some(unk))
   }
 
   /** Gate surface 3: cross-corpus application — train on `docs`,
-    * segment `target`, and report the corpus-weighted top-`topK` piece
+    * segment `target`, and report the corpus-weighted top-20 piece
     * frequencies (the [[Bpe]] `bpe3_cross_encode` shape: subwords only
     * help where the trained pieces actually occur, so the profile is a
     * genuine out-of-domain pin, OOV handling included). */
-  def crossSegmentCounts(docs: DataFrame, target: DataFrame,
-                         p: Params = Params(), topK: Int = 20,
-                         targetTextCol: String = "text"): DataFrame = {
-    val (vocab, _) = train(docs, p)
-    segment(target, vocab.select("piece", "cnt"), p, targetTextCol)
+  def crossSegmentCounts(docs: DataFrame, target: DataFrame): DataFrame = {
+    val (vocab, _) = train(docs)
+    segment(target, vocab.select("piece", "cnt"))
       .select(col("freq"), explode(col("pieces")).as("piece"))
       .groupBy("piece").agg(sum("freq").as("cnt"))
-      .orderBy(desc("cnt"), asc("piece")).limit(topK)
+      .orderBy(desc("cnt"), asc("piece")).limit(20)
   }
 
   /** Gate surface 2: per-language segmentation census under the final
@@ -313,13 +307,13 @@ object UnigramTokenizer {
     * log-likelihood, and fertility. Per-language word frequencies join
     * the (global) segmentation broadcast-style, exactly like
     * [[Bpe]]-fertility (bpe4). */
-  def langStats(docs: DataFrame, p: Params = Params()): DataFrame = {
-    val (_, seg) = train(docs, p)
+  def langStats(docs: DataFrame): DataFrame = {
+    val (_, seg) = train(docs)
     val segB = seg.select(col("word"), size(col("pieces")).as("n_pieces"),
       col("ll_fp"))
     docs.select(col("lang"),
         explode(TextAnalysis.tokens(col("text"))).as("word"))
-      .filter(length(col("word")).between(1, p.maxWordLen))
+      .filter(length(col("word")).between(1, Params().maxWordLen))
       .groupBy("lang", "word").agg(count(lit(1)).as("wfreq"))
       .join(broadcast(segB), "word")
       .groupBy("lang")

@@ -1,7 +1,6 @@
 package graft
 
-/** CI lock for the plan audit (previously only the manual
-  * [[PlanAudit]] main): every `SparkEntry.queries` plan is built at
+/** CI lock for the plan audit: every `SparkEntry.queries` plan is built at
   * sf0.001 and must (a) analyze/plan without error and (b) contain zero
   * `CartesianProduct` nodes. BroadcastNestedLoopJoin is allowed — every
   * audited occurrence is a broadcast one-row scalar (COVID-baseline

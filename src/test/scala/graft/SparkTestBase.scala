@@ -13,27 +13,10 @@ trait SparkTestBase extends AnyFunSuite {
   /** Fresh temp dir, deleted at JVM exit — specs must not accrete /tmp
     * litter across test runs (one hook drains a queue; never a hook per
     * call). */
-  def tempDir(prefix: String): String = SparkTestBase.tempDir(prefix)
+  def tempDir(prefix: String): String =
+    Fs.tempDirDeletedAtExit(prefix).toString
 }
 
 object SparkTestBase {
   lazy val session: SparkSession = GraftSession.local(4, "graft-test")
-
-  private val dirsToClean =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val hookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var p = dirsToClean.poll()
-      while (p != null) {
-        try graft.Fs.deleteRecursively(p) catch { case _: Throwable => () }
-        p = dirsToClean.poll()
-      }
-    }))
-
-  def tempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    hookInstalled
-    dirsToClean.add(d)
-    d.toString
-  }
 }

@@ -278,10 +278,14 @@ class PipelineSpec extends SparkTestBase {
     Manifest.append(path, Manifest.Entry("http://x/a.parquet", "2024-01", "yellow", true, 123L))
     Manifest.append(path, Manifest.Entry("http://x/b.parquet", "2024-02", "yellow", false, 0L,
       Some("HTTP 503")))
+    val raw = Manifest.Entry("http://x/c.parquet", "2024-03", "green", false, 0L,
+      Some("line one\nline two\tcol \"quoted\" back\\slash"), Some(7L))
+    Manifest.append(path, raw)
     val entries = Manifest.read(path)
-    assert(entries.size == 2)
+    assert(entries.size == 3)
     assert(entries.head.yearMonth == "2024-01")
-    assert(Manifest.errorCount(path) == 1)
+    assert(entries(2) == raw)
+    assert(Manifest.errorCount(path) == 2)
   }
 
   test("schema set-compare across the four cab types") {
