@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -12,7 +14,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.cpus
     // Default the per-query artifact INTO THE REPO (cwd under sbt), not
     // /tmp: the checked-in BENCH_rN.json tail-truncates the long line,
     // so this file is the only complete per-query record a later round
@@ -20,9 +21,8 @@ object Bench {
     val outFile =
       Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         "BENCH_queries_latest.json")).toAbsolutePath
-    val onlyRaw = sys.env.get("SPARK_GRAFT_ONLY")
-    val selected = SparkEntry.onlyFilter(onlyRaw)
-    val isSubset = SparkEntry.queries.keys.exists(n => !selected(n))
+    val gates = GateRunner.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+    val isSubset = gates.size < SparkEntry.queries.size
     // Clear the previous run's artifact FIRST: a crashed run must leave no
     // file rather than a stale one the driver would misattribute to this
     // round. Subset probes (SPARK_GRAFT_ONLY) never touch the artifact at
@@ -30,19 +30,43 @@ object Bench {
     // runs can't destroy the last full-round file.
     if (!isSubset)
       try Files.deleteIfExists(outFile) catch { case _: Throwable => () }
-    val warehouse = Files.createTempDirectory("graft-warehouse")
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.ui.enabled", "false")
-        // bucketed-table gates use saveAsTable; point the warehouse at a
-        // temp dir so table data never lands in the repo working
-        // directory (these sessions use the in-memory catalog — no Hive
-        // metastore exists to relocate)
-        .config("spark.sql.warehouse.dir", warehouse.toString),
-      shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.session("graft-bench")
+    val record = measure(spark, sfDir, gates)
+    val json = GateRunner.json.writeValueAsString(record)
+    println(json)
+    // The driver captures only the TAIL of stdout and parses JSON lines
+    // from it; with ~90 per-query entries the full line above is ~3 KB and
+    // its head falls outside the window ("parsed": null in BENCH_r03/r04).
+    // Emit a second, compact summary line LAST so a complete parseable
+    // line always sits inside any tail capture; the full per-query map
+    // stays in the long line above and in the file artifact.
+    // subset probes don't write (or own) the artifact — advertising its
+    // path would attribute a stale full-round per-query map to this run
+    val fileRef = if (isSubset) "subset" -> true else "queries_file" -> outFile.toString
+    println(GateRunner.json.writeValueAsString(
+      record.updated("queries", Map.empty) + ("n_queries" -> gates.size) + fileRef))
+    // Also persist to a file: robust to any stdout truncation. A
+    // SPARK_GRAFT_ONLY subset probe must NOT clobber the driver's
+    // full-round artifact.
+    if (!isSubset)
+      try Files.write(outFile, (json + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () }
+    spark.stop()
+  }
+
+  private def round(v: Double, places: Int): Double = {
+    val f = math.pow(10, places)
+    math.round(v * f) / f
+  }
+
+  /** Bench's measurement policy over the gate loop: the record both
+    * stdout lines print. A gate that fails every attempt times -1 and is
+    * listed under `failed`. */
+  private[graft] def measure(spark: SparkSession, sfDir: String,
+                             gates: Seq[(String, GateRunner.Build)]): ListMap[String, Any] = {
+    val runner = new GateRunner(spark, sfDir, "bench", GateRunner.noop)
+    def runOnce(name: String, build: GateRunner.Build): Option[Double] =
+      runner.once(name, build).toOption
     // Load guard: two rounds' headline numbers were inflated 5-40× by
     // concurrent sbt load on the driver box. Stamp the host 1-min load
     // average and a fixed-cost calibration query (same work every round,
@@ -60,28 +84,14 @@ object Bench {
     val loadStart = loadavg()
     // Warm the JVM/codegen paths once on the smallest SF so the measured
     // numbers reflect steady-state execution, not first-query JIT.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    runOnce("entry", (s, _) => SparkEntry.entry(s))
     val calibStart = calibrate()
     // best-of-two per query: first pass pays planning/codegen/page-cache
     // warmup and scheduler noise; the min is the steady-state number a
     // long-running service would see. A query that fails both attempts
     // must be visible in the JSON itself — a time-to-failure entry would
     // make a broken query look FAST.
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        None
-      }
-    }
-    val queryList = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => selected(n) }
-    val firstPass = queryList.map { case (name, fn) =>
+    val firstPass = gates.map { case (name, fn) =>
       var times = (1 to 2).flatMap(_ => runOnce(name, fn)).toVector
       // Concurrent host load (the driver runs sbt alongside the bench)
       // can inflate a run 5-40×, and best-of-two still reports the
@@ -95,7 +105,6 @@ object Bench {
         s(0) > 0.3 && (s(1) - s(0)) / s(0) > 0.5
       }
       while (unstable && extras < 2) { times = times ++ runOnce(name, fn); extras += 1 }
-      if (times.isEmpty) failed += name
       name -> times.minOption.getOrElse(-1.0)
     }
     val calibMid = calibrate()
@@ -112,45 +121,16 @@ object Bench {
     val requeued = calibDrift > 1.5
     val results =
       if (!requeued) firstPass
-      else {
-        val byName = Map(queryList: _*)
-        firstPass.map { case (name, t) =>
-          if (t < 0) name -> t
-          else name -> runOnce(name, byName(name)).fold(t)(math.min(t, _))
-        }
+      else firstPass.zip(gates).map { case ((name, t), (_, fn)) =>
+        if (t < 0) name -> t else name -> runOnce(name, fn).fold(t)(math.min(t, _))
       }
     val calibEnd = calibrate()
     val loadEnd = loadavg()
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val env = f""""load_start":$loadStart%.2f,"load_end":$loadEnd%.2f,"calib_start_sec":$calibStart%.3f,"calib_mid_sec":$calibMid%.3f,"calib_end_sec":$calibEnd%.3f,"requeued":$requeued"""
-    val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,$env,"sf":"$sfDir"}"""
-    println(json)
-    // The driver captures only the TAIL of stdout and parses JSON lines
-    // from it; with ~90 per-query entries the full line above is ~3 KB and
-    // its head falls outside the window ("parsed": null in BENCH_r03/r04).
-    // Emit a second, compact summary line LAST so a complete parseable
-    // line always sits inside any tail capture; the full per-query map
-    // stays in the long line above and in the file artifact.
-    // subset probes don't write (or own) the artifact — advertising its
-    // path would attribute a stale full-round per-query map to this run
-    val fileRef =
-      if (isSubset) """"subset":true""" else s""""queries_file":"$outFile""""
-    val compact =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{},"n_queries":${results.size},"failed":$failedJson,$env,"sf":"$sfDir",$fileRef}"""
-    println(compact)
-    // Also persist to a file: robust to any stdout truncation. A
-    // SPARK_GRAFT_ONLY subset probe must NOT clobber the driver's
-    // full-round artifact.
-    if (!isSubset)
-      try Files.write(outFile, (json + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-    spark.stop()
-    // the per-run temp warehouse holds full copies of the bucketed gate
-    // tables — must not accumulate across rounds
-    Fs.deleteRecursively(warehouse)
+    ListMap("metric" -> "total", "value" -> round(results.map(_._2).filter(_ >= 0).sum, 3),
+      "unit" -> "sec", "queries" -> ListMap.from(results.map { case (n, t) => n -> round(t, 3) }),
+      "failed" -> results.collect { case (n, t) if t < 0 => n },
+      "load_start" -> round(loadStart, 2), "load_end" -> round(loadEnd, 2),
+      "calib_start_sec" -> round(calibStart, 3), "calib_mid_sec" -> round(calibMid, 3),
+      "calib_end_sec" -> round(calibEnd, 3), "requeued" -> requeued, "sf" -> sfDir)
   }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Apply engine defaults to an arbitrary builder (local or cluster). */
-  def tune(b: SparkSession.Builder, shufflePartitions: Int = 32): SparkSession.Builder =
+  def tune(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -35,35 +35,38 @@ object GraftSession {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-  /** Session for `spark-submit` deployments: the same engine tuning, with
-    * master/resources/deploy-mode left to the submit command (cluster
-    * managers inject `spark.master` into system properties). Falls back
-    * to [[local]] when no external master is configured, so the same
-    * `main` runs identically under `sbt runMain` and `spark-submit`. */
-  def submitted(appName: String = "graft"): SparkSession =
-    if (sys.props.contains("spark.master")) {
-      val s = tune(SparkSession.builder().appName(appName)).getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    } else local(appName = appName)
-
-  /** Core count for the CLI mains' local sessions: `SPARK_GRAFT_CPUS`
-    * when set, else every core this JVM sees. */
+  /** Core count for local sessions: `SPARK_GRAFT_CPUS` when set, else
+    * every core this JVM sees. */
   lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** Local session for tests / CLI runs. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
-            appName: String = "graft"): SparkSession = {
-    val warehouse = Fs.tempDirDeletedAtExit("graft-warehouse")
+  /** The one session factory: every main and the test suites run on it.
+    *
+    * Master: an externally set `spark.master` wins (`spark-submit` and the
+    * cluster managers inject it as a system property), so one `main` runs
+    * the same under `sbt runMain` and `spark-submit`; otherwise the
+    * session is `local[cpus]` with the UI off.
+    *
+    * Shuffle width, the one rule: `spark.sql.shuffle.partitions` is the
+    * context's `defaultParallelism`. On `local[cpus]` that is `cpus`
+    * (the width [[tune]] is given); under a cluster manager it is
+    * `spark.default.parallelism` when set, else the executor cores
+    * registered when the session starts. A standalone master (`spark://`,
+    * `local-cluster`) starts it before any executor registers, so it gets
+    * Spark's floor of 2 unless `spark.default.parallelism` is set. AQE
+    * coalesces below the width per stage.
+    *
+    * Warehouse: a temp dir deleted at JVM exit. Bucketed-table gates
+    * `saveAsTable` full copies there, and a run that throws must not
+    * leave them behind. */
+  def session(appName: String): SparkSession = {
+    val b = SparkSession.builder().appName(appName)
+      .config("spark.sql.warehouse.dir", Fs.tempDirDeletedAtExit("graft-warehouse").toString)
     val s = tune(
-      SparkSession.builder()
-        .master(s"local[$cores]")
-        .appName(appName)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir", warehouse.toString),
-      shufflePartitions = math.max(cores, 8)
-    ).getOrCreate()
+      if (sys.props.contains("spark.master")) b
+      else b.master(s"local[$cpus]").config("spark.ui.enabled", "false"),
+      shufflePartitions = cpus).getOrCreate()
+    s.conf.set("spark.sql.shuffle.partitions", s.sparkContext.defaultParallelism.toLong)
     s.sparkContext.setLogLevel("WARN")
     s
   }

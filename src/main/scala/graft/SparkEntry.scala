@@ -17,9 +17,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.pricingSummary(Tables.lineitem(spark, "/root/testdata/sf0.001"))
 
-  /** `SPARK_GRAFT_ONLY` parsing shared by [[Verify]] and [[Bench]] (one
-    * definition so the two tools can never probe different gate sets):
-    * comma-separated tokens; a token matches a query when it equals the
+  /** `SPARK_GRAFT_ONLY` parsing behind [[GateRunner.selected]], which
+    * [[Verify]] and [[Bench]] run (one definition so the two tools can
+    * never probe different gate sets): comma-separated tokens; a token matches a query when it equals the
     * name, is an underscore-delimited prefix ("d7" →
     * d7_segment_dup_stats), or equals the family's leading letters
     * ("t" → t5…/t11…, but NOT tp1…, whose family is "tp"). A blank or

@@ -74,7 +74,7 @@ object AnalyticsJob {
 
   def main(args: Array[String]): Unit = {
     val a = EtlJob.parseArgs(args)
-    val spark = GraftSession.submitted("graft-analytics")
+    val spark = GraftSession.session("graft-analytics")
     try run(spark, a("input"), a("output"),
       a.getOrElse("from-year", "1900").toInt, a.getOrElse("to-year", "2999").toInt)
     finally spark.stop()

@@ -60,7 +60,7 @@ object BatchRunner {
   def main(args: Array[String]): Unit = {
     val a = EtlJob.parseArgs(args)
     val cabs = a.getOrElse("cab-types", "yellow,green,fhv,fhvhv").split(",").toSeq
-    val spark = GraftSession.submitted("graft-batch")
+    val spark = GraftSession.session("graft-batch")
     try {
       val counts = run(spark, a("input"), a("output"), cabs, a.get("manifest"))
       counts.toSeq.sortBy(_._1).foreach { case (cab, n) =>

@@ -48,7 +48,7 @@ object EtlJob {
 
   def main(args: Array[String]): Unit = {
     val a = parseArgs(args)
-    val spark = GraftSession.submitted("graft-etl")
+    val spark = GraftSession.session("graft-etl")
     try {
       val n = run(spark, a("input"), a("output"), a.getOrElse("cab-type", "yellow"))
       println(s"""{"job":"etl","cab_type":"${a.getOrElse("cab-type", "yellow")}","rows_curated":$n}""")

@@ -17,7 +17,7 @@ object FixtureGen {
 
   def main(args: Array[String]): Unit = {
     val a = EtlJob.parseArgs(args)
-    val spark = GraftSession.submitted("graft-fixture-gen")
+    val spark = GraftSession.session("graft-fixture-gen")
     try {
       val events = Tables.events(spark, a("events"))
       val raw = a.getOrElse("cab-type", "yellow") match {

@@ -18,5 +18,5 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = GraftSession.local(4, "graft-test")
+  lazy val session: SparkSession = GraftSession.session("graft-test")
 }
