@@ -19,10 +19,11 @@ object SparkEntry {
 
   /** `SPARK_GRAFT_ONLY` parsing behind [[GateRunner.selected]], which
     * [[Verify]] and [[Bench]] run (one definition so the two tools can
-    * never probe different gate sets): comma-separated tokens; a token matches a query when it equals the
-    * name, is an underscore-delimited prefix ("d7" →
-    * d7_segment_dup_stats), or equals the family's leading letters
-    * ("t" → t5…/t11…, but NOT tp1…, whose family is "tp"). A blank or
+    * never probe different gate sets): comma-separated tokens; a token
+    * matches a query when it equals the name, is an underscore-delimited
+    * prefix ("d7" → d7_segment_dup_stats), or equals the family's
+    * leading letters ("t" → t5…/t11…, but NOT tp1…, whose family is
+    * "tp"). A blank or
     * empty value means NO filter — an exported-but-empty variable must
     * not silently select zero queries. */
   private[graft] def onlyFilter(raw: Option[String]): String => Boolean = {
