@@ -10,8 +10,11 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: `runMain graft.PlanDump <outDir> <tag> <query>[,<query>...]`
   * Reads the data directory from `SPARK_GRAFT_SF_DIR` (default sf0.001 —
-  * plan SHAPE is scale-invariant for these fixtures; AQE runtime
-  * re-optimization is a separate concern the bench measures). Exits 1
+  * plan SHAPE is scale-invariant for these fixtures). `explain` before
+  * execution prints AQE's initial plan, so a runtime rewrite — AQE's
+  * own, or [[graft.functions.TinySortInOnePartition]] dropping a range
+  * exchange — shows only in the final plan of an executed query
+  * (`AdaptiveSparkPlanExec.executedPlan` after an action). Exits 1
   * when a name is unknown or a dump fails, after the session closes, so
   * automation that gathers plan evidence never proceeds on stale or
   * missing files.

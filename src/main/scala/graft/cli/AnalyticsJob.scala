@@ -45,8 +45,10 @@ object AnalyticsJob {
     * EARLIEST month — the reference's COVID-dip framing with the 2019
     * baseline generalized to the first observed month. One aggregation
     * pass; the baseline joins back via an unpartitioned window over the
-    * POST-AGGREGATE frame (#months rows, so the single-task window is
-    * free — never over raw trips). */
+    * POST-AGGREGATE frame (#months rows, never over raw trips). That
+    * frame is tiny, so [[graft.functions.TinySortInOnePartition]] runs
+    * the window and the final sort in the aggregate's one task with no
+    * exchange: the trend is 2 jobs, like the other summaries. */
   def monthlyTrend(trips: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val monthly = trips.groupBy("pickup_ym")

@@ -8,7 +8,8 @@ import graft.functions.HashExpressions._
 
 /** Registers the engine's native expressions as SQL functions, so
   * `spark.sql("SELECT simhash_text(text) ...")` works anywhere the
-  * Column API does. Activate with
+  * Column API does, and installs the AQE runtime rule
+  * [[TinySortInOnePartition]]. Activate with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
   * (done by [[graft.GraftSession]]) or `withExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -18,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "built-in")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectRuntimeOptimizerRule(_ => TinySortInOnePartition)
     ext.injectFunction((
       FunctionIdentifier("shingle_hashes"),
       info("shingle_hashes", "_FUNC_(text[, k]) - sorted distinct xxhash64 of word k-shingles (default k=3)"),

@@ -1,9 +1,5 @@
 package graft.cli
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -42,28 +38,6 @@ class CuratedReadSpec extends SparkTestBase {
     val dir = tempDir("graft-curated-read")
     BatchRunner.run(spark, rawDrop(dir), s"$dir/curated", Cabs)
     s"$dir/curated"
-  }
-
-  /** Jobs `f` launches on this thread, and how many of their stages read
-    * or fill a persisted RDD; counted after the bus drained. The job
-    * group keeps other suites' jobs on the shared session out. */
-  private def launchedBy(f: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val group = s"curated-read-${System.nanoTime()}"
-    def ours(p: java.util.Properties) =
-      Option(p).exists(_.getProperty("spark.jobGroup.id") == group)
-    val jobs, cachedStages = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties) && e.stageInfo.rddInfos.exists(_.storageLevel != StorageLevel.NONE))
-          cachedStages.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "curated read probe")
-    try { f; TestListenerBus.drain(sc); (jobs.get(), cachedStages.get()) }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 
   test("the pinned curated schema is the one BatchRunner and EtlJob trees infer") {
@@ -106,6 +80,25 @@ class CuratedReadSpec extends SparkTestBase {
     assert(scanned(AnalyticsJob.busiestZones(trips, "pu_zone")) == Set("pu_zone"))
     assert(scanned(AnalyticsJob.busiestZones(trips, "do_zone")) == Set("do_zone"))
     assert(scanned(AnalyticsJob.monthlyTrend(trips)) == Set("pickup_ym", "fare"))
+  }
+
+  test("each AnalyticsJob summary over one curated partition runs 2 jobs") {
+    // the aggregate's map stage and the result: the sorted summaries plan
+    // no range shuffle (no sampling job, no second map stage) and the
+    // trend's baseline window no single-partition exchange
+    val month = CuratedWriter.readCurated(spark, batchTree).filter(
+      col("cab_type") === "yellow" && col("pickup_year") === 2024 && col("pickup_month") === 1)
+    val summaries = Seq(
+      "hourly" -> AnalyticsJob.hourlyFare(month),
+      "dow" -> AnalyticsJob.tripsByDow(month),
+      "pu_zone" -> AnalyticsJob.busiestZones(month, "pu_zone"),
+      "do_zone" -> AnalyticsJob.busiestZones(month, "do_zone"),
+      "trend" -> AnalyticsJob.monthlyTrend(month))
+    summaries.foreach { case (name, df) =>
+      var rows = 0
+      assert(launchedBy { rows = df.collect().length }._1 == 2, s"$name job count")
+      assert(rows > 0, s"$name is empty")
+    }
   }
 
   test("AnalyticsJob.run caches nothing") {

@@ -1,10 +1,83 @@
 package graft.functions
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
 import graft.SparkTestBase
 
 /** The native expressions must be reachable from plain SQL via the
-  * injected function registry (SparkSessionExtensions). */
+  * injected function registry (SparkSessionExtensions), and the injected
+  * AQE runtime rule [[TinySortInOnePartition]] must sort tiny results in
+  * one partition and leave everything else as Spark plans it. */
 class GraftExtensionsSpec extends SparkTestBase {
+
+  /** 24 groups of a 1000-row frame, sorted: a few hundred bytes. */
+  private def sortedSmallAggregate: DataFrame =
+    spark.range(1000).groupBy((col("id") % 24).as("h"))
+      .agg(count(lit(1)).as("n"), sum("id").as("s")).orderBy("h")
+
+  /** Collects `df`; its rows, its job count and its final AQE plan. */
+  private def run(df: DataFrame): (Seq[Row], Int, String) = {
+    var rows = Seq.empty[Row]
+    val jobs = launchedBy { rows = df.collect().toSeq }._1
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+      case p => p.toString
+    }
+    (rows, jobs, plan)
+  }
+
+  test("a sorted tiny aggregate runs 2 jobs and plans no range shuffle") {
+    val (rows, jobs, plan) = run(sortedSmallAggregate)
+    assert(jobs == 2, plan)
+    assert(!plan.contains("rangepartitioning"), plan)
+    assert(plan.contains("Coalesce 1"), plan)
+    assert(rows.map(_.getLong(0)) == (0L until 24L))
+    assert(rows.map(_.getLong(1)).sum == 1000L)
+  }
+
+  test("excluding the rule by name restores the range shuffle, same rows") {
+    val key = "spark.sql.adaptive.optimizer.excludedRules"
+    val (withRule, _, _) = run(sortedSmallAggregate)
+    spark.conf.set(key, TinySortInOnePartition.ruleName)
+    try {
+      val (rows, jobs, plan) = run(sortedSmallAggregate)
+      assert(jobs == 4, plan)
+      assert(plan.contains("rangepartitioning"), plan)
+      assert(rows == withRule)
+    } finally spark.conf.unset(key)
+  }
+
+  test("an unpartitioned window over a tiny aggregate plans no single-partition exchange") {
+    val months = spark.range(1000).groupBy((col("id") % 12).as("m")).count()
+    val df = months.withColumn("base", first("count").over(Window.orderBy("m")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))).orderBy("m")
+    val (rows, jobs, plan) = run(df)
+    assert(!plan.contains("Exchange SinglePartition"), plan)
+    assert(!plan.contains("rangepartitioning"), plan)
+    assert(jobs == 2, plan)
+    assert(rows.map(_.getLong(0)) == (0L until 12L))
+    assert(rows.forall(_.getLong(2) == 84L)) // month 0: ids 0, 12, ..., 996
+  }
+
+  test("an aggregate over the size bound keeps its parallel range sort") {
+    val df = spark.range(400000).groupBy((col("id") * 7 % 400000).as("k")).count().orderBy("k")
+    val (rows, _, plan) = run(df)
+    assert(plan.contains("rangepartitioning"), plan)
+    assert(!plan.contains("Coalesce 1"), plan)
+    assert(rows.length == 400000)
+    assert(rows.head.getLong(0) == 0L && rows.last.getLong(0) == 399999L)
+  }
+
+  test("a sort under a partition-dependent expression is left alone") {
+    val df = sortedSmallAggregate.withColumn("mid", monotonically_increasing_id())
+    val (rows, _, plan) = run(df)
+    assert(plan.contains("rangepartitioning"), plan)
+    assert(!plan.contains("Coalesce 1"), plan)
+    assert(rows.map(_.getLong(0)) == (0L until 24L))
+  }
 
   test("custom functions are callable from spark.sql") {
     val r = spark.sql(
