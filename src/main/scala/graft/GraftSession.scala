@@ -70,4 +70,15 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `body` with its jobs labeled `desc` in the Spark UI and listener
+    * timelines. The label is thread-local, so concurrent callers each keep
+    * their own; the caller's label (Bench, QueryProfile, an outer scope)
+    * is restored afterwards, not cleared. */
+  private[graft] def labeled[A](spark: SparkSession, desc: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
 }

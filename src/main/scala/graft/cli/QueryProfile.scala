@@ -1,6 +1,7 @@
 package graft.cli
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.graftshim
 
 import graft.{GateRunner, GraftSession}
 
@@ -40,21 +41,9 @@ object QueryProfile {
     for ((name, build) <- GateRunner.named(args.toSeq); w <- runner.once(name, build)) { // warmup
       done.clear(); jobs.clear()
       runner.once(name, build).foreach { t =>
-        // listener bus is async — drain until the captured job count
-        // stabilizes AND no started job is missing its JobEnd (a fixed
-        // sleep silently undercounted on a loaded box — ADVICE r13)
-        var drained = done.size(); var spins = 0
-        var stable = false
-        while (!stable && spins < 20) {
-          Thread.sleep(150)
-          val now = done.size()
-          stable = now == drained && jobs.isEmpty
-          drained = now; spins += 1
-        }
-        if (!jobs.isEmpty)
-          System.err.println(s"[profile] WARNING: ${jobs.size} job(s) " +
-            "started but never ended within the drain window — the " +
-            "per-job breakdown below is incomplete")
+        // every job of the run has ended; the bus delivers its events
+        // asynchronously, so read them only once it is empty
+        graftshim.drainListenerBus(spark.sparkContext)
         val rows = done.toArray(Array.empty[(Int, Long, String)]).sortBy(_._1)
         println(f"[profile] $name warm=$w%.3fs timed=$t%.3fs jobs=${rows.length}")
         rows.foreach { case (id, ms, desc) =>

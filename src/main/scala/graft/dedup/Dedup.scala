@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.labeled
 import graft.sources.CuratedWriter.{hadoopFs, nextVersion, readPointer,
   versions, writePointer}
 
@@ -592,7 +593,6 @@ object Dedup {
         least(col("rep_old"), col("rep_new")).as("rep"),
         (coalesce(col("bsz_old"), lit(0L)) + coalesce(col("bsz_new"), lit(0L)))
           .as("bsz"))
-    lastCensusMergePlan = mergedBuckets.queryExecution.executedPlan.toString
     val folded = BandIndex(index.signatures.unionByName(sigsNew),
       index.bands.unionByName(bandedNew), mergedBuckets,
       index.numHashes, index.numBands, index.shingleK, index.reproducible)
@@ -623,14 +623,6 @@ object Dedup {
     * accumulated lineage (each fold adds a Union + the batch's scan
     * subtree, ~5-10 nodes on typical inputs → a cut every few folds). */
   private[graft] val compactionChainCutoff = 48
-
-  /** Executed plan of the LAST [[compactBandIndex]] bucket-census merge
-    * in this JVM — diagnostic only. PlanAuditSpec pins the merge's join
-    * strategy through it (the one join in the ingest loop whose BOTH
-    * sides grow with corpus buckets). Last-writer-wins global: valid
-    * only when reads are single-threaded with the call, as the specs
-    * are — never audit concurrent folds through it. */
-  @volatile private[graft] var lastCensusMergePlan: String = ""
 
   /** Persist a band index ([[graft.similarity.Ivf.save]] pattern, io14)
     * in the APPEND-ONLY, VERSIONED layout:
@@ -715,18 +707,6 @@ object Dedup {
     } catch {
       case e: java.util.concurrent.ExecutionException => throw e.getCause
     } finally pool.shutdown()
-  }
-
-  /** Label the jobs of `body` in the Spark UI / listener timelines
-    * (thread-local — safe under [[inParallel]]). Restores the PREVIOUS
-    * description rather than null so a caller-set label (Bench /
-    * QueryProfile) survives the nested scope. */
-  private def labeled[A](spark: org.apache.spark.sql.SparkSession,
-                         desc: String)(body: => A): A = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(prev)
   }
 
   /** Fold the CURRENT version's append chain into a single batch in a
@@ -878,19 +858,10 @@ object Dedup {
       .select(col("doc_in"), col("doc_corpus"),
         (size(filter(zip_with(col("sig_i"), col("sig_c"), (x, y) => x === y),
           eq => eq)).cast("double") / index.numHashes).as("est_jaccard"))
-    lastScreenPlan = scored.queryExecution.executedPlan.toString
     val out = scored.localCheckpoint(eager = true)
     sigsIn.unpersist()
     out
   }
-
-  /** Executed plan of the LAST [[screenAgainstIndex]] call in this JVM
-    * — diagnostic only (PlanAuditSpec pins the band equi-join strategy
-    * through it; the returned frame is checkpointed, so the gate's
-    * final plan no longer contains the join). Last-writer-wins global:
-    * valid only when the read is single-threaded with the call, as the
-    * spec sites are. */
-  @volatile private[graft] var lastScreenPlan: String = ""
 
   /** SimHash 64-bit fingerprint from distinct-token hashes: per bit
     * position, sign of Σ±1 over tokens (Charikar '02). Computed by the

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.labeled
+
 /** Strongly connected components of a DIRECTED graph — the directed
   * sibling of [[graft.dedup.StarComponents]] (whose min-label result is
   * only correct for undirected reachability).
@@ -60,15 +62,6 @@ import org.apache.spark.sql.functions._
   */
 object Scc {
 
-  /** Diagnostics from the LAST [[components]] run in this JVM — spec /
-    * SCALE.md instrumentation only (not thread-safe, not part of the
-    * operator contract): FW-BW levels used, and the maximum round count
-    * any single label propagation needed. SccSpec reads these to
-    * assert the logarithmic regime on planted cycle/chain
-    * pathologies. */
-  @volatile private[graft] var lastLevels: Int = 0
-  @volatile private[graft] var lastMaxPropRounds: Int = 0
-
   /** Eager lineage cut WITH a statistics reset. A plain localCheckpoint
     * carries the origin plan's sizeInBytes ESTIMATE forward, and the
     * pointer-jump self-joins square that estimate every round — after r
@@ -115,74 +108,76 @@ object Scc {
     // maxLevels bounds the union width at 2·64 children.
     val resultParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var level = 0
-    lastLevels = 0
-    lastMaxPropRounds = 0
     while (!nodes.isEmpty) {
       require(level < 64,
         s"SCC did not converge in 64 FW-BW levels — refusing to " +
           "return a partial labeling (expected O(log n) with random " +
           "pivots; raise maxLevels if the graph genuinely needs more)")
-      // 1. trim: no in-edges or no out-edges within the node's part —
-      // an SCC-mate would supply both, so these are singleton SCCs
-      val hasIn = rem.select(col("dst").as("node")).distinct()
-      val hasOut = rem.select(col("src").as("node")).distinct()
-      val trimmed = nodes.select("node")
-        .join(hasIn, Seq("node"), "left_anti")
-        .union(nodes.select("node").join(hasOut, Seq("node"), "left_anti"))
-        .distinct()
-        .transform(cp)
-      resultParts += trimmed.select(col("node"), col("node").as("scc"))
-      nodes = nodes.join(trimmed, Seq("node"), "left_anti")
-        .transform(cp)
-      rem = rem
-        .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst", "part").transform(cp)
-      if (!nodes.isEmpty) {
-        // 2. deterministic pseudo-random priority, new salt per level;
-        // both directions propagate in ONE loop — `dir` is just another
-        // key column, so the round count is max(fwd, bwd), not the sum
-        val withPrio = nodes.withColumn("prio",
-          xxhash64(col("node"), lit(level)))
-        val dirEdges = rem.select(col("src"), col("dst"), lit(0).as("dir"))
-          .union(rem.select(col("dst").as("src"), col("src").as("dst"),
-            lit(1).as("dir")))
-        val lab = minLabel(withPrio, dirEdges, 128)
-        val cat = withPrio.select("node", "part")
-          .join(lab.filter(col("dir") === 0)
-            .select(col("node"), col("ln").as("f_ln")), "node")
-          .join(lab.filter(col("dir") === 1)
-            .select(col("node"), col("ln").as("b_ln")), "node")
+      // every job of the level carries its 1-based number, and each
+      // propagation round its own (SccSpec reads both off the labels)
+      val levelLabel = s"scc: level ${level + 1}"
+      labeled(spark, levelLabel) {
+        // 1. trim: no in-edges or no out-edges within the node's part —
+        // an SCC-mate would supply both, so these are singleton SCCs
+        val hasIn = rem.select(col("dst").as("node")).distinct()
+        val hasOut = rem.select(col("src").as("node")).distinct()
+        val trimmed = nodes.select("node")
+          .join(hasIn, Seq("node"), "left_anti")
+          .union(nodes.select("node").join(hasOut, Seq("node"), "left_anti"))
+          .distinct()
           .transform(cp)
-        // 3. peel every COMPLETE scc: fwd label == bwd label (labels are
-        // constant per scc at fixpoint, so the group is the whole scc)
-        val sccNodes = cat.filter(col("f_ln") === col("b_ln"))
-        val labels = sccNodes.groupBy("part", "f_ln")
-          .agg(min("node").as("scc"))
-        resultParts += sccNodes.join(labels, Seq("part", "f_ln"))
-          .select("node", "scc")
-        // 4. split survivors by the full LABEL PAIR — the finest
-        // SCC-closed refinement both propagations yield (every SCC has
-        // constant labels, so no SCC spans two classes; this refines
-        // classic FW-BW's 3-way pivot split, e.g. a singleton chain
-        // shatters at every prefix/suffix priority record instead of
-        // only at the pivot). Edges between classes can never be
-        // intra-scc, so they drop with the refinement (a part-id hash
-        // collision would only co-schedule two unrelated subproblems,
-        // never merge their edge sets — correctness is unaffected)
-        nodes = cat.filter(col("f_ln") =!= col("b_ln"))
-          .select(col("node"),
-            xxhash64(col("part"), col("f_ln"), col("b_ln")).as("part"))
+        resultParts += trimmed.select(col("node"), col("node").as("scc"))
+        nodes = nodes.join(trimmed, Seq("node"), "left_anti")
           .transform(cp)
-        rem = rem.select("src", "dst")
-          .join(nodes.select(col("node").as("src"), col("part").as("ps")), "src")
-          .join(nodes.select(col("node").as("dst"), col("part").as("pd")), "dst")
-          .filter(col("ps") === col("pd"))
-          .select(col("src"), col("dst"), col("ps").as("part"))
-          .transform(cp)
+        rem = rem
+          .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
+          .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
+          .select("src", "dst", "part").transform(cp)
+        if (!nodes.isEmpty) {
+          // 2. deterministic pseudo-random priority, new salt per level;
+          // both directions propagate in ONE loop — `dir` is just another
+          // key column, so the round count is max(fwd, bwd), not the sum
+          val withPrio = nodes.withColumn("prio",
+            xxhash64(col("node"), lit(level)))
+          val dirEdges = rem.select(col("src"), col("dst"), lit(0).as("dir"))
+            .union(rem.select(col("dst").as("src"), col("src").as("dst"),
+              lit(1).as("dir")))
+          val lab = minLabel(withPrio, dirEdges, 128, levelLabel)
+          val cat = withPrio.select("node", "part")
+            .join(lab.filter(col("dir") === 0)
+              .select(col("node"), col("ln").as("f_ln")), "node")
+            .join(lab.filter(col("dir") === 1)
+              .select(col("node"), col("ln").as("b_ln")), "node")
+            .transform(cp)
+          // 3. peel every COMPLETE scc: fwd label == bwd label (labels are
+          // constant per scc at fixpoint, so the group is the whole scc)
+          val sccNodes = cat.filter(col("f_ln") === col("b_ln"))
+          val labels = sccNodes.groupBy("part", "f_ln")
+            .agg(min("node").as("scc"))
+          resultParts += sccNodes.join(labels, Seq("part", "f_ln"))
+            .select("node", "scc")
+          // 4. split survivors by the full LABEL PAIR — the finest
+          // SCC-closed refinement both propagations yield (every SCC has
+          // constant labels, so no SCC spans two classes; this refines
+          // classic FW-BW's 3-way pivot split, e.g. a singleton chain
+          // shatters at every prefix/suffix priority record instead of
+          // only at the pivot). Edges between classes can never be
+          // intra-scc, so they drop with the refinement (a part-id hash
+          // collision would only co-schedule two unrelated subproblems,
+          // never merge their edge sets — correctness is unaffected)
+          nodes = cat.filter(col("f_ln") =!= col("b_ln"))
+            .select(col("node"),
+              xxhash64(col("part"), col("f_ln"), col("b_ln")).as("part"))
+            .transform(cp)
+          rem = rem.select("src", "dst")
+            .join(nodes.select(col("node").as("src"), col("part").as("ps")), "src")
+            .join(nodes.select(col("node").as("dst"), col("part").as("pd")), "dst")
+            .filter(col("ps") === col("pd"))
+            .select(col("src"), col("dst"), col("ps").as("part"))
+            .transform(cp)
+        }
       }
       level += 1
-      lastLevels = level
     }
     val labeling = resultParts.reduceOption(_.unionByName(_))
       .getOrElse(Seq.empty[(Long, Long)].toDF("node", "scc"))
@@ -205,10 +200,10 @@ object Scc {
     * suggest it. Sums are decimal(38,0): 2^63-magnitude terms times any
     * feasible row count stay far below 10^38, so no overflow wrap.
     * Input `nodes`: (node, part, prio); `edges`: intra-part
-    * (src, dst, dir) carrying both orientations. Returns
-    * (node, dir, lp, ln). */
+    * (src, dst, dir) carrying both orientations; each round's jobs are
+    * labeled `<label> round R`. Returns (node, dir, lp, ln). */
   private def minLabel(nodes: DataFrame, edges: DataFrame,
-                       maxRounds: Int): DataFrame = {
+                       maxRounds: Int, label: String): DataFrame = {
     var labels = nodes
       .select(col("node"), col("prio").as("lp"), col("node").as("ln"))
       .crossJoin(broadcast(nodes.sparkSession.range(2)
@@ -253,14 +248,15 @@ object Scc {
       // first-stage exchange AQE reuses
       val once = minOf(fresh(labels).unionByName(viaEdge)
         .unionByName(jump(labels)))
-      val next = minOf(fresh(once).unionByName(jump(once)))
-        .transform(cp)
-      val nextSig = sig(next)
+      val (next, nextSig) =
+        labeled(nodes.sparkSession, s"$label round ${round + 1}") {
+          val n = minOf(fresh(once).unionByName(jump(once))).transform(cp)
+          (n, sig(n))
+        }
       converged = nextSig == prevSig
       prevSig = nextSig
       labels = next
       round += 1
-      if (round > lastMaxPropRounds) lastMaxPropRounds = round
     }
     labels
   }

@@ -444,7 +444,6 @@ object Relational {
         .select("g", "h").distinct()
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= k)
-      lastPrefilterPlan = prefiltered.queryExecution.executedPlan.toString
       val kept = prefiltered.localCheckpoint(eager = true)
       // done: a full sketch (k rows) OR an unfiltered group (bound maxed
       // — fewer than k distinct hashes genuinely exist); note a group
@@ -469,15 +468,6 @@ object Relational {
     }
     if (out == null) raw.limit(0).withColumn("rk", lit(1)) else out
   }
-
-  /** Executed plan of the LAST [[kmvBottomK]] prefilter round in this
-    * JVM — diagnostic only (PlanAuditSpec pins the regime-adaptive
-    * join strategy through it; the loop's eager checkpoints mean the
-    * gate's final plan no longer contains the join). Last-writer-wins
-    * global: valid only when the read is single-threaded with the
-    * call, as the spec sites are — concurrent queries would observe
-    * another call's plan. */
-  @volatile private[graft] var lastPrefilterPlan: String = ""
 
   /** KMV (k-minimum-values / bottom-k) distinct-count sketch per group
     * (Bar-Yossef et al. 2002; the Theta-sketch building block):

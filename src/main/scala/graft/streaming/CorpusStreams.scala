@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.GraftSession.labeled
 import graft.dedup.Dedup
 
 /** Document-corpus operators through the REAL streaming runtime — the
@@ -140,6 +141,30 @@ object CorpusStreams {
       Dedup.buildBandIndex(corpus, reproducible = reproducible),
       tau, inputFiles)
 
+  /** The corpus side of a screen against `index`, checkpointed so every
+    * micro-batch probes an identical, lineage-free index (a freshly built
+    * index otherwise re-evaluates per batch): the small buckets' members,
+    * the oversize buckets' representatives, and the signatures. Each
+    * freeze is labeled so the phase is attributable in job timelines
+    * (guide §1.5). */
+  private def frozenCorpus(spark: SparkSession, index: Dedup.BandIndex)
+      : (DataFrame, DataFrame, DataFrame) = {
+    def frozen(desc: String)(df: DataFrame): DataFrame =
+      labeled(spark, s"screen: freeze $desc")(df.localCheckpoint(eager = true))
+    val bucketsC = frozen("buckets")(index.buckets)
+    val smallC = frozen("small-buckets")(
+      index.bands.join(bucketsC, Seq("band", "band_hash"))
+        .filter(col("bsz") <= Dedup.MaxBucket)
+        .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus")))
+    val starC = frozen("star-buckets")(
+      bucketsC.filter(col("bsz") > Dedup.MaxBucket)
+        .select(col("band"), col("band_hash"), col("rep").as("doc_corpus")))
+    val sigCorpus = frozen("signatures")(
+      index.signatures.select(col("doc_id").as("doc_corpus"),
+        col("sig").as("sig_c")))
+    (smallC, starC, sigCorpus)
+  }
+
   /** [[growingNearDupScreen]] against a (typically RELOADED) persisted
     * band index — the actual production loop at 100 TB: the corpus
     * side comes from `Dedup.loadBandIndex` (built once per snapshot,
@@ -156,28 +181,7 @@ object CorpusStreams {
     val bands = index.numBands
     val shingleK = index.shingleK
     val reproducible = index.reproducible
-    // checkpoint the corpus-side frames so every micro-batch probes an
-    // identical, lineage-free index (a freshly built index otherwise
-    // re-evaluates per batch); labeled so the freeze phase is
-    // attributable in job timelines (guide §1.5)
-    val sc = spark.sparkContext
-    def frozen(desc: String)(df: DataFrame): DataFrame = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"screen: freeze $desc")
-      try df.localCheckpoint(eager = true)
-      finally sc.setJobDescription(prev)
-    }
-    val bucketsC = frozen("buckets")(index.buckets)
-    val smallC = frozen("small-buckets")(
-      index.bands.join(bucketsC, Seq("band", "band_hash"))
-        .filter(col("bsz") <= Dedup.MaxBucket)
-        .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus")))
-    val starC = frozen("star-buckets")(
-      bucketsC.filter(col("bsz") > Dedup.MaxBucket)
-        .select(col("band"), col("band_hash"), col("rep").as("doc_corpus")))
-    val sigCorpus = frozen("signatures")(
-      index.signatures.select(col("doc_id").as("doc_corpus"),
-        col("sig").as("sig_c")))
+    val (smallC, starC, sigCorpus) = frozenCorpus(spark, index)
 
     import spark.implicits._
     def agreement(a: Seq[Long], b: Seq[Long]): Double =
@@ -312,28 +316,7 @@ object CorpusStreams {
     val bands = index.numBands
     val shingleK = index.shingleK
     val reproducible = index.reproducible
-    // checkpoint the corpus-side frames so every micro-batch probes an
-    // identical, lineage-free index (a freshly built index otherwise
-    // re-evaluates per batch); labeled so the freeze phase is
-    // attributable in job timelines (guide §1.5)
-    val sc = spark.sparkContext
-    def frozen(desc: String)(df: DataFrame): DataFrame = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"screen: freeze $desc")
-      try df.localCheckpoint(eager = true)
-      finally sc.setJobDescription(prev)
-    }
-    val bucketsC = frozen("buckets")(index.buckets)
-    val smallC = frozen("small-buckets")(
-      index.bands.join(bucketsC, Seq("band", "band_hash"))
-        .filter(col("bsz") <= Dedup.MaxBucket)
-        .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus")))
-    val starC = frozen("star-buckets")(
-      bucketsC.filter(col("bsz") > Dedup.MaxBucket)
-        .select(col("band"), col("band_hash"), col("rep").as("doc_corpus")))
-    val sigCorpus = frozen("signatures")(
-      index.signatures.select(col("doc_id").as("doc_corpus"),
-        col("sig").as("sig_c")))
+    val (smallC, starC, sigCorpus) = frozenCorpus(spark, index)
 
     import spark.implicits._
     val hMs = horizonSeconds * 1000L

@@ -201,19 +201,6 @@ object EventStreams {
         sum("event_id").as("event_id_sum"),
         round(sum("value"), 4).as("value_sum"))
 
-  /** Max total state-store rows observed in the LAST [[throughStream]]
-    * run in this JVM (instrumentation for CrossCorpusSpec's state-bound
-    * case, not part of the contract): for the keyed screens, state rows
-    * = live bucket keys.
-    * Accumulated by a [[org.apache.spark.sql.streaming.StreamingQueryListener]]
-    * over EVERY micro-batch of the run — `recentProgress` alone is
-    * capped at `spark.sql.streaming.numRecentProgressUpdates` (default
-    * 100) and would silently understate the peak on longer runs.
-    * Last-writer-wins global: valid only under throughStream's own
-    * serialization (confLock) — read it right after the call returns,
-    * never across concurrent runs. */
-  @volatile private[graft] var lastMaxStateRows: Long = 0L
-
   /** Stagger a just-written parquet directory's part-file mtimes in
     * part-name order: FileStreamSource processes new files in mtime
     * order, and a single write stamps every part with the SAME mtime,
@@ -306,40 +293,11 @@ object EventStreams {
         }
       statePartitions.foreach(n =>
         spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-      // state-store census for the state-bound spec: max total state
-      // rows across the run's micro-batches (0 for stateless runs).
-      // recentProgress alone is capped at numRecentProgressUpdates
-      // (default 100) — a run with more micro-batches would silently
-      // understate the peak — so a listener accumulates the max over
-      // EVERY progress event; the final read still folds recentProgress
-      // in because the listener bus is async (the most recent events
-      // may not have been dispatched when the query stops, but those
-      // are exactly the ones recentProgress retains).
-      val maxState = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-          if (e.progress.name == sink) {
-            val total = e.progress.stateOperators.map(_.numRowsTotal).sum
-            maxState.getAndUpdate(m => math.max(m, total)); ()
-          }
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      }
-      spark.streams.addListener(listener)
-      try {
-        val q = transform(stream)
-          .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation", s"$dir/ckpt")
-          .outputMode(mode).start()
-        try q.processAllAvailable() finally q.stop()
-        lastMaxStateRows = math.max(maxState.get(),
-          q.recentProgress.iterator
-            .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-            .foldLeft(0L)(math.max))
-      } finally spark.streams.removeListener(listener)
+      val q = transform(stream)
+        .writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", s"$dir/ckpt")
+        .outputMode(mode).start()
+      try q.processAllAvailable() finally q.stop()
       // Eager localCheckpoint detaches the result from both the memory
       // sink's temp view and the on-disk input/checkpoint, so neither
       // leaks past this call (repeated gate/bench runs used to accrete

@@ -29,4 +29,8 @@ package object graftshim {
       cp.queryExecution.toRdd, cp.schema)
   }
 
+  /** Block until every listener event posted so far has been delivered;
+    * the bus is Spark-internal. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -55,9 +55,9 @@ class CuratedReadSpec extends SparkTestBase {
   }
 
   test("readCurated launches no Spark job") {
-    assert(launchedBy(CuratedWriter.readCurated(spark, batchTree))._1 == 0)
+    assert(launchedBy(CuratedWriter.readCurated(spark, batchTree)).jobs == 0)
     // the probe does see the inference job a schemaless read launches
-    assert(launchedBy(spark.read.parquet(batchTree))._1 > 0)
+    assert(launchedBy(spark.read.parquet(batchTree)).jobs > 0)
   }
 
   test("readCurated: an empty tree is an empty frame, a missing one fails") {
@@ -96,13 +96,13 @@ class CuratedReadSpec extends SparkTestBase {
       "trend" -> AnalyticsJob.monthlyTrend(month))
     summaries.foreach { case (name, df) =>
       var rows = 0
-      assert(launchedBy { rows = df.collect().length }._1 == 2, s"$name job count")
+      assert(launchedBy { rows = df.collect().length }.jobs == 2, s"$name job count")
       assert(rows > 0, s"$name is empty")
     }
   }
 
   test("AnalyticsJob.run caches nothing") {
-    val (jobs, cachedStages) =
+    val SparkTestBase.Launched(jobs, cachedStages, _, _) =
       launchedBy(AnalyticsJob.run(spark, batchTree, tempDir("graft-curated-out"), 2024, 2024))
     assert(jobs > 0)
     assert(cachedStages == 0, "a stage of AnalyticsJob.run touched a persisted RDD")

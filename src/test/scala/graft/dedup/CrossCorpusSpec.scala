@@ -1,6 +1,8 @@
 package graft.dedup
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.SparkTestBase
 
@@ -414,15 +416,33 @@ class CrossCorpusSpec extends SparkTestBase {
       .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
     val corpus = Seq((1000L, "static corpus filler sharing nothing with any " +
       "incoming pair at all")).toDF("doc_id", "text")
-    val unbounded = graft.streaming.CorpusStreams.growingNearDupScreen(spark,
-      incoming.drop("ts"), corpus, reproducible = true, tau = 0.5,
-      inputFiles = 3).count()
-    val unboundedState = graft.streaming.EventStreams.lastMaxStateRows
-    val watermarked = graft.streaming.CorpusStreams
-      .growingNearDupScreenWatermarked(spark, incoming, corpus,
-        horizonSeconds = 4, watermarkDelay = "1 second", reproducible = true,
-        tau = 0.5, inputFiles = 3).count()
-    val watermarkedState = graft.streaming.EventStreams.lastMaxStateRows
+    // the most state rows any micro-batch of `screen` held, over EVERY
+    // progress event: `recentProgress` keeps only the last 100
+    def maxStateRows(screen: => Long): (Long, Long) = {
+      val peak = new java.util.concurrent.atomic.AtomicLong(0L)
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+          val rows = e.progress.stateOperators.map(_.numRowsTotal).sum
+          peak.getAndUpdate(math.max(_, rows)); ()
+        }
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      }
+      spark.streams.addListener(listener)
+      try {
+        val n = screen
+        graftshim.drainListenerBus(spark.sparkContext)
+        (n, peak.get())
+      } finally spark.streams.removeListener(listener)
+    }
+    val (unbounded, unboundedState) = maxStateRows(
+      graft.streaming.CorpusStreams.growingNearDupScreen(spark,
+        incoming.drop("ts"), corpus, reproducible = true, tau = 0.5,
+        inputFiles = 3).count())
+    val (watermarked, watermarkedState) = maxStateRows(
+      graft.streaming.CorpusStreams.growingNearDupScreenWatermarked(spark,
+        incoming, corpus, horizonSeconds = 4, watermarkDelay = "1 second",
+        reproducible = true, tau = 0.5, inputFiles = 3).count())
     assert(unbounded == 20L && watermarked == 20L,
       s"screens diverged: unbounded $unbounded, watermarked $watermarked")
     assert(watermarkedState < unboundedState,

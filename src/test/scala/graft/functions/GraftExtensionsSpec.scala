@@ -21,7 +21,7 @@ class GraftExtensionsSpec extends SparkTestBase {
   /** Collects `df`; its rows, its job count and its final AQE plan. */
   private def run(df: DataFrame): (Seq[Row], Int, String) = {
     var rows = Seq.empty[Row]
-    val jobs = launchedBy { rows = df.collect().toSeq }._1
+    val jobs = launchedBy { rows = df.collect().toSeq }.jobs
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan.toString
       case p => p.toString

@@ -9,6 +9,20 @@ class SccSpec extends SparkTestBase {
     Scc.components(edges.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** The labeling, the FW-BW levels it took and the most rounds any one
+    * label propagation took, read off the jobs' `scc: level L round R`
+    * labels. */
+  private def sccCounted(edges: Seq[(Long, Long)]): (Map[Long, Long], Int, Int) = {
+    var m = Map.empty[Long, Long]
+    val labels = launchedBy { m = scc(edges) }.descriptions
+    val Label = """scc: level (\d+)(?: round (\d+))?""".r
+    val counts = labels.collect { case Label(l, r) => (l.toInt, Option(r).fold(0)(_.toInt)) }
+    val levels = counts.map(_._1).maxOption.getOrElse(0)
+    val rounds = counts.map(_._2).maxOption.getOrElse(0)
+    assert(levels > 0 && rounds > 0, s"no scc level/round label among the jobs: ${labels.distinct}")
+    (m, levels, rounds)
+  }
+
   test("two cycles joined by a one-way bridge stay separate components") {
     // cycle {1,2,3} -> bridge 3->4 -> cycle {4,5,6} -> tail 6->7
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
@@ -36,10 +50,9 @@ class SccSpec extends SparkTestBase {
     // refused at maxPropRounds=64; pointer jumping needs ~log2(128)
     val n = 128L
     val edges = (0L until n).map(i => (i, (i + 1) % n))
-    val m = scc(edges)
+    val (m, _, rounds) = sccCounted(edges)
     assert(m.size == n && m.values.forall(_ == 0L))
-    assert(Scc.lastMaxPropRounds <= 16,
-      s"cycle-128 took ${Scc.lastMaxPropRounds} propagation rounds")
+    assert(rounds <= 16, s"cycle-128 took $rounds propagation rounds")
   }
 
   test("a deep 80-chain of singletons finishes in logarithmic levels") {
@@ -48,10 +61,9 @@ class SccSpec extends SparkTestBase {
     // level instead
     val n = 80L
     val edges = (0L until n - 1).map(i => (i, i + 1))
-    val m = scc(edges)
+    val (m, levels, _) = sccCounted(edges)
     assert(m == (0L until n).map(v => v -> v).toMap)
-    assert(Scc.lastLevels <= 16,
-      s"chain-80 took ${Scc.lastLevels} FW-BW levels")
+    assert(levels <= 16, s"chain-80 took $levels FW-BW levels")
   }
 
   test("condensation contracts the two-cycle fixture to a 3-node DAG") {

@@ -101,15 +101,21 @@ class KmvSpec extends SparkTestBase {
     val h = graft.functions.HashExpressions.fnv1a32(col("text"))
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
-    // lastPrefilterPlan is a last-writer-wins JVM global — valid only
-    // because each kmvBottomK call and its read are single-threaded
-    val shuffled = rows(Relational.kmvBottomK(df, "source", h, k = 16,
+    // each call's rows, and the plans of its prefilter rounds: the one
+    // join on the bounds frame's key `bg`, run behind an eager checkpoint
+    def sketch(d: => org.apache.spark.sql.DataFrame): (Set[(String, Long, Int)], Seq[String]) = {
+      var out = Set.empty[(String, Long, Int)]
+      val plans = launchedBy { out = rows(d) }.plansReading("bg")
+      assert(plans.nonEmpty, "no prefilter round ran")
+      (out, plans)
+    }
+    val (shuffled, shuffledPlans) = sketch(Relational.kmvBottomK(df, "source", h, k = 16,
       broadcastGroupLimit = 1))
-    assert(Relational.lastPrefilterPlan.contains("ShuffledHashJoin"),
-      s"forced many-groups regime did not shuffle-hash:\n${Relational.lastPrefilterPlan}")
-    val broadcasted = rows(Relational.kmvBottomK(df, "source", h, k = 16))
-    assert(Relational.lastPrefilterPlan.contains("BroadcastHashJoin"),
-      s"small-groups regime did not broadcast:\n${Relational.lastPrefilterPlan}")
+    shuffledPlans.foreach(plan => assert(plan.contains("ShuffledHashJoin"),
+      s"forced many-groups regime did not shuffle-hash:\n$plan"))
+    val (broadcasted, broadcastPlans) = sketch(Relational.kmvBottomK(df, "source", h, k = 16))
+    broadcastPlans.foreach(plan => assert(plan.contains("BroadcastHashJoin"),
+      s"small-groups regime did not broadcast:\n$plan"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("h")
     val ref = rows(df.select(col("source"), h.as("h")).distinct()
